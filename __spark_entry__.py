@@ -1138,11 +1138,11 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     embeds the seeded hyperplane CONSTANTS (algorithm parameters, not
     results) and re-derives buckets, candidates, cosines and the top-k
     window in DuckDB over the same embeddings table. Determinism
-    across engines is audited, not assumed
-    (tools/make_goldens_r4.ann_margin_audit): every SRP sign decision
-    sits ≥ 8e-5 from zero and every adjacent top-30 cosine gap
-    ≥ 5e-6 — orders of magnitude above ~1e-13 cross-engine float
-    noise — and the output cosine is rounded to 6 dp on both sides."""
+    across engines is audited, not assumed (tests/test_ann_margins.py):
+    at every gate scale each SRP sign decision sits ≥ 9e-6 from zero
+    and every adjacent top-30 cosine gap ≥ 5e-6 — orders of magnitude
+    above ~1e-13 cross-engine float noise — and the output cosine is
+    rounded to 6 dp on both sides."""
     from t_res_spark.operators.similarity_search import lsh_topk
 
     _register(spark, sf_dir)
@@ -1415,7 +1415,7 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     unit tests — ivf_train_centroids recall + degenerate-sample). The
     oracle embeds the same seed-derived centroid constants and
     re-derives assignment/probes/re-rank/top-k in DuckDB; cross-engine
-    float margins audited by tools/make_goldens_r4.ann_margin_audit."""
+    float margins audited by tests/test_ann_margins.py."""
     from t_res_spark.operators.similarity_search import ivf_topk
 
     _register(spark, sf_dir)
@@ -2044,8 +2044,8 @@ def _ann_lsh_oracle_sql(dim: int = 64, bits: int = 8, tables: int = 4,
     time from the same seed-derived hyperplane CONSTANTS the engine
     uses (algorithm parameters, not results — nothing here snapshots
     engine output). Cross-engine float safety is audited by
-    tools/make_goldens_r4.ann_margin_audit: every projection sign sits
-    ≥7e-5 from zero and every adjacent top-30 cosine gap ≥5e-6 —
+    tests/test_ann_margins.py: every projection sign sits
+    ≥9e-6 from zero and every adjacent top-30 cosine gap ≥5e-6 —
     orders of magnitude above ~1e-13 ulp noise — and the output cosine
     is rounded to 6 dp on both sides."""
     from t_res_spark.operators.similarity_search import _hyperplanes
@@ -2106,9 +2106,9 @@ def _ann_ivf_oracle_sql(dim: int = 64, k_cents: int = 8, nprobe: int = 3,
     """Full SQL recomputation of ivf_topk against the fixture
     quantizer (same seed-derived constants as the gate query):
     first-max cell assignment (s desc, cell asc), top-nprobe probes
-    with the struct-sort tie order (s desc, cell DESC), cosine re-rank
-    + top-k window. Margins audited (cell/probe/re-rank gaps) by
-    tools/make_goldens_r4.ann_margin_audit."""
+    in ivf_cells_arrow's probe order (s desc, cell DESC), cosine
+    re-rank + top-k window. Margins audited (cell/probe/re-rank gaps)
+    by tests/test_ann_margins.py."""
     cents = _fmt_plane_rows(enumerate(_ivf_fixture_centroids(dim, k_cents)))
     return f"""
             WITH cents(cell, c) AS (VALUES

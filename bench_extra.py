@@ -167,7 +167,7 @@ def bench_ann_stages(spark) -> dict:
     import __spark_entry__ as entry_mod
     from t_res_spark.operators.similarity_search import (
         _hyperplanes,
-        srp_bucket,
+        srp_buckets_arrow,
     )
 
     entry_mod._register(spark, SF_DIR)
@@ -180,12 +180,7 @@ def bench_ann_stages(spark) -> dict:
     res = {}
     res["bucket_proj_only"] = _timed(
         spark, "ann/bucket",
-        lambda: emb.select(
-            "vec_id",
-            F.posexplode(
-                F.array(*[srp_bucket(F.col("embedding"), p) for p in planes])
-            ).alias("table_id", "bucket"),
-        ),
+        lambda: srp_buckets_arrow(emb, "vec_id", "embedding", planes),
     )
     from t_res_spark.operators.similarity_search import cosine
 

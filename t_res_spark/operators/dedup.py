@@ -213,6 +213,21 @@ def _band_hashes(bands: int, rows_per_band: int):
     )
 
 
+def _estimate_clears(sig_a, sig_b, threshold: float):
+    """Boolean column: the MinHash Jaccard estimate of two signatures
+    (the fraction of equal positions) is at least
+    ``threshold - 2/sqrt(num_hashes)``. The margin is about four
+    standard errors of the estimator, so recall holds at 16 hashes as
+    at 64."""
+    n = F.greatest(F.size(sig_a), F.lit(1))
+    matches = F.aggregate(
+        F.zip_with(sig_a, sig_b, lambda u, v: (u == v).cast("int")),
+        F.lit(0),
+        lambda acc, z: acc + z,
+    )
+    return matches / n >= F.lit(threshold) - F.lit(2.0) / F.sqrt(n.cast("double"))
+
+
 def minhash_lsh_pairs(
     signatures: DataFrame,
     bands: int = 16,
@@ -275,30 +290,15 @@ def minhash_lsh_pairs(
         .select(F.array_sort("items").alias("items"))
     )
 
-    def _est(x, y):
-        matches = F.aggregate(
-            F.zip_with(x["sig"], y["sig"], lambda u, v: (u == v).cast("int")),
-            F.lit(0),
-            lambda acc, z: acc + z,
-        )
-        return matches / F.greatest(F.size(x["sig"]), F.lit(1))
-
     pairs_arr = F.flatten(
         F.transform(
             "items",
-            lambda x, i: F.filter(
-                F.transform(
+            lambda x, i: F.transform(
+                F.filter(
                     F.slice(F.col("items"), i + 2, F.size("items")),
-                    lambda y: F.struct(
-                        x["doc_id"].alias("a"),
-                        y["doc_id"].alias("b"),
-                        _est(x, y).alias("est"),
-                    ),
+                    lambda y: _estimate_clears(x["sig"], y["sig"], estimate_threshold),
                 ),
-                lambda p: p["est"]
-                >= F.lit(estimate_threshold)
-                - F.lit(2.0)
-                / F.sqrt(F.greatest(F.size(x["sig"]), F.lit(1)).cast("double")),
+                lambda y: F.struct(x["doc_id"].alias("a"), y["doc_id"].alias("b")),
             ),
         )
     )
@@ -345,38 +345,6 @@ def jaccard_verify(
         .filter(F.col("jaccard") >= threshold)
         .select("a", "b", "jaccard")
     )
-
-
-def signature_estimate_filter(
-    pairs: DataFrame,
-    signatures: DataFrame,
-    threshold: float,
-    margin: float | None = None,
-) -> DataFrame:
-    """Pre-filter candidate pairs by the MinHash Jaccard ESTIMATE
-    (fraction of matching signature positions) before the exact verify.
-
-    The estimate is free — the signatures already exist and are ~512 B
-    per row vs. full shingle arrays (KBs) — so only pairs whose estimate
-    clears ``threshold - margin`` pay the shingle-array shuffle of
-    ``jaccard_verify``. ``margin=None`` derives 2/sqrt(num_hashes) from
-    the actual signature length (≈4 std errors of the estimator), so
-    recall holds whether callers use 64 hashes or 16."""
-    sa = signatures.select(F.col("doc_id").alias("a"), F.col("sig").alias("sig_a"))
-    sb = signatures.select(F.col("doc_id").alias("b"), F.col("sig").alias("sig_b"))
-    est = F.aggregate(
-        F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    ) / F.greatest(F.size("sig_a"), F.lit(1))
-    joined = pairs.join(sa, "a").join(sb, "b").withColumn("est_jaccard", est)
-    if margin is None:
-        cut = F.lit(threshold) - F.lit(2.0) / F.sqrt(
-            F.greatest(F.size("sig_a"), F.lit(1)).cast("double")
-        )
-    else:
-        cut = F.lit(threshold - margin)
-    return joined.filter(F.col("est_jaccard") >= cut).select("a", "b")
 
 
 def near_duplicate_clusters(
@@ -466,9 +434,9 @@ def embedding_near_duplicates(
     # surviving pair set (the jaccard_verify pattern). (id → vec) is
     # functional, so distinct-on-ids is the identical pair set and the
     # cosine sees the identical vectors.
-    # buckets from one Arrow matmul pass per batch (srp_buckets_arrow —
-    # r6; sign-margin audit there covers this corpus incl. the planted
-    # 1.5x copies), ids-only rows
+    # ids-only bucket rows from one Arrow matmul per batch; the sign
+    # margins of the gate corpora, planted 1.5x copies included, are
+    # audited in tests/test_ann_margins.py
     bucketed_ids = srp_buckets_arrow(vectors, id_col, vec_col, planes)
     other_ids = bucketed_ids.select(
         F.col(id_col).alias("id_b"), "table_id", "bucket"
@@ -525,13 +493,12 @@ def simhash(docs: DataFrame, text_col: str = "text", bits: int = 64) -> DataFram
     (Catalyst does not CSE across higher-order functions — see
     minhash_signatures), then ALL 64 bit votes fold in a single
     ``aggregate`` pass whose accumulator is a 64-long counter array.
-    One traversal of the token array per row, not 64. (r6 note: the
-    flat 64-fold alternative — one scalar fold per bit, the reshape
-    that won 8x in srp_bucket — was A/B'd here and LOST slightly
+    One traversal of the token array per row, not 64. (The flat
+    alternative — one scalar fold per bit — is slightly slower
     (0.99 s vs 0.89 s on the sf1.0 corpus): this inner lambda is plain
     long arithmetic with no per-element literal-matrix indexing, so the
     single traversal's allocation overhead is cheaper than 64
-    re-traversals. Kept as-is, measured.)"""
+    re-traversals.)"""
     words = F.array_distinct(F.split(F.lower(F.trim(F.col(text_col))), "\\s+"))
     hashed = _rebalance(docs).select(
         "doc_id", F.transform(words, lambda s: F.xxhash64(s)).alias("hs")

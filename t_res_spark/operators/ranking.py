@@ -44,6 +44,7 @@ from ..functions.similarity import (
 )
 from ..functions.text import alias_noise_filter
 from .blocking import salted, with_block_keys
+from .similarity_search import _dot
 
 
 @pandas_udf(T.DoubleType())
@@ -212,17 +213,6 @@ def partial_match(
     return exact.unionByName(top1.select("mention", "variation", "score"))
 
 
-def cosine_score(emb_a, emb_b):
-    """Native dot product of unit vectors (cosine) — zip_with + aggregate,
-    stays inside whole-stage codegen; the Spark-first replacement for the
-    reference's faiss cosine (ranking.py:549-562)."""
-    return F.aggregate(
-        F.zip_with(emb_a, emb_b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def embedding_match(
     queries: DataFrame,
     aliases: DataFrame,
@@ -263,7 +253,9 @@ def embedding_match(
     scored = (
         pairs.join(q_emb, "mention")
         .join(kb, "variation", "inner")
-        .withColumn("score", cosine_score(F.col("q_emb"), F.col("v_emb")))
+        # both sides are unit vectors, so the dot product is the cosine
+        # (the reference's faiss cosine, ranking.py:549-562)
+        .withColumn("score", _dot(F.col("q_emb"), F.col("v_emb")))
         .filter(F.col("score") >= F.lit(threshold))
     )
     w = Window.partitionBy("mention").orderBy(F.desc("score"), F.asc("variation"))

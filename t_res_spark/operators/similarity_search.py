@@ -1,16 +1,18 @@
-"""Similarity search over an embedding column (array<float>).
+"""Similarity search over an embedding column (array<float|double>).
 
-Two paths (task brief):
-- brute-force cosine top-k — the correctness baseline: a blocked
+Three paths:
+- brute-force cosine top-k — the exact baseline: a broadcast
   cross-join with native dot-product math (F.zip_with/F.aggregate) and a
-  window top-k. Exact, O(n·m); fine when one side is small/broadcast.
-- LSH-bucketed ANN — the scale path: sign-random-projection buckets
-  (SimHash over the embedding), candidates only within a bucket (plus
-  multi-probe via several hyperplane tables), then exact cosine re-rank.
-  Sub-linear candidate sets at 100 TB; recall tunable via tables/bits.
+  window top-k. O(n·m); fine when the query side is small.
+- LSH-bucketed ANN — sign-random-projection buckets in several
+  hyperplane tables, candidates only within a shared bucket, then an
+  exact cosine re-rank. Recall tunable via tables/bits.
+- IVF ANN — nearest-centroid cells, each query probes its ``nprobe``
+  best cells, then the same exact re-rank.
 
-No UDFs anywhere — dot products, norms, and projections are all native
-column expressions (whole-stage codegen).
+Bucket and cell DECISIONS run as one numpy matmul per Arrow batch
+(``mapInArrow``); every score that reaches the output is a native
+column expression.
 """
 
 from __future__ import annotations
@@ -26,11 +28,11 @@ def _dot(a, b):
 
     The fold is interpreted (higher-order functions are excluded from
     whole-stage codegen) but FLAT — one products array, one running
-    sum. A statically unrolled ``F.get(a,j)*F.get(b,j)`` chain was
-    measured in r6 and rejected: at dim 64 it costs ~0.76 s of py4j
-    Column-building per query and pushes whole-stage codegen over
-    Janino's 64 KB method limit, so it executes as a BIGGER interpreted
-    tree (0.34 s vs 0.27 s for the fold on a 16k-row cosine scan)."""
+    sum. A statically unrolled ``F.get(a,j)*F.get(b,j)`` chain is
+    slower: at dim 64 it costs ~0.76 s of py4j Column-building per
+    query and pushes whole-stage codegen over Janino's 64 KB method
+    limit, so it executes as a BIGGER interpreted tree (0.34 s vs
+    0.27 s for the fold on a 16k-row cosine scan)."""
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v)
 
 
@@ -40,6 +42,20 @@ def _norm(a):
 
 def cosine(a, b):
     return _dot(a, b) / (F.greatest(_norm(a) * _norm(b), F.lit(1e-12)))
+
+
+def _top_k(
+    pairs: DataFrame, k: int, id_col: str, vec_col: str, q_id_col: str, q_vec_col: str
+) -> DataFrame:
+    """(q_id, id, cos_sim, rnk): the k best candidate pairs per query by
+    exact cosine, ties broken by id ascending."""
+    scored = pairs.withColumn("cos_sim", cosine(F.col(vec_col), F.col(q_vec_col)))
+    w = Window.partitionBy(q_id_col).orderBy(F.desc("cos_sim"), F.asc(id_col))
+    return (
+        scored.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= k)
+        .select(q_id_col, id_col, "cos_sim", "rnk")
+    )
 
 
 def brute_force_topk(
@@ -53,16 +69,10 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query. The query side is
     broadcast (it is the small side by construction — a query batch);
-    the corpus side streams, so the plan is a single broadcast
-    nested-loop with codegen'd arithmetic and a top-k window."""
-    joined = vectors.crossJoin(F.broadcast(queries)).withColumn(
-        "cos_sim", cosine(F.col(vec_col), F.col(q_vec_col))
-    )
-    w = Window.partitionBy(q_id_col).orderBy(F.desc("cos_sim"), F.asc(id_col))
-    return (
-        joined.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(q_id_col, id_col, "cos_sim", "rnk")
+    the corpus side streams through one broadcast nested-loop join and
+    a top-k window."""
+    return _top_k(
+        vectors.crossJoin(F.broadcast(queries)), k, id_col, vec_col, q_id_col, q_vec_col
     )
 
 
@@ -71,55 +81,25 @@ def _hyperplanes(dim: int, bits: int, seed: int) -> list[list[float]]:
     return rng.normal(size=(bits, dim)).astype("float64").tolist()
 
 
-def _const_double_array(values) -> "F.Column":
-    """array<double> literal built with ONE py4j round trip.
+def _vector_batches(batches, dim: int):
+    """(ids, (n, dim) matrix) per Arrow batch of (id, vector) rows,
+    keeping only the rows whose vector is non-null, exactly ``dim``
+    wide and finite. The other rows get no bucket or cell, so they
+    never become candidates: a null or ragged vector would otherwise
+    break the reshape, and a default bucket would pile every such row
+    into one hot bucket."""
+    import pyarrow.compute as pc
 
-    ``F.array(*[F.lit(float(x)) …])`` costs one py4j call per element —
-    measured ~1 s of DRIVER time per 2k-element plane/centroid matrix
-    on every query construction (the bench times construction too).
-    A single ``F.expr`` ships the whole literal as text; ``repr`` of a
-    Python float is the shortest round-trip form, so
-    ``Double.parseDouble`` reconstructs bit-identical doubles."""
-    return F.expr(
-        "array(" + ",".join(f"CAST('{float(x)!r}' AS DOUBLE)" for x in values) + ")"
-    )
-
-
-def srp_bucket(vec_col, planes: list[list[float]]):
-    """Sign-random-projection bucket id: one bit per hyperplane —
-    native column math, no UDF.
-
-    r6 reshape — FLAT per-bit folds instead of the former single-pass
-    nested fold: one ``zip_with(vec, plane_i, *)`` products array + one
-    scalar ``aggregate`` sum per hyperplane. The nested form (one
-    traversal whose accumulator was a bits-wide array rebuilt by an
-    inner ``zip_with`` at every element) allocated an array + ``bits``
-    structs per vector ELEMENT; both shapes are interpreted (HOFs are
-    excluded from whole-stage codegen), but the flat shape does ~8x
-    less allocation/dispatch — measured 4.44 s → 0.52 s for the 4-table
-    bucket projection over 16k x 64-dim vectors at sf0.1. (A statically
-    unrolled codegen chain was also tried: 2048 terms overflow Janino's
-    64 KB method limit, fall back to whole-tree interpretation, and run
-    slower than either fold — see _dot.) Per projection the multiply/
-    add sequence is the identical ascending-index order starting from
-    0.0, so every projection double is bit-identical to the old fold
-    (checksum-verified) and no SRP sign decision can move."""
-    bits = len(planes)
-    # 2^i stays exact and the bit sum inside int64 for bits <= 62
-    if bits > 62:
-        raise ValueError(f"srp_bucket supports at most 62 bits, got {bits}")
-    bucket = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        plane_arr = _const_double_array(plane)
-        proj = F.aggregate(
-            F.zip_with(vec_col, plane_arr, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda s, v: s + v,
-        )
-        bucket = bucket + F.when(
-            proj > 0, F.lit(1 << i).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-    return bucket
+    for batch in batches:
+        widths = pc.list_value_length(batch.column(1)).fill_null(-1)
+        batch = batch.filter(pc.equal(widths, dim))
+        if batch.num_rows == 0:
+            continue
+        ids = batch.column(0).to_numpy(zero_copy_only=False)
+        flat = batch.column(1).flatten().to_numpy(zero_copy_only=False)
+        v = flat.reshape(-1, dim)
+        finite = np.isfinite(v).all(axis=1)  # null elements arrive as NaN
+        yield ids[finite], v[finite]
 
 
 def srp_buckets_arrow(
@@ -128,51 +108,40 @@ def srp_buckets_arrow(
     vec_col: str,
     all_planes: list[list[list[float]]],
 ) -> DataFrame:
-    """(id, table_id, bucket) for every row × table — one BLAS matmul
-    per Arrow batch (guide §4.2: hand whole batches to vectorized
-    native code) instead of a per-row interpreted fold.
+    """(id, table_id, bucket) for every usable row × hyperplane table:
+    bit i of a bucket is set when the vector's dot product with plane i
+    is positive. One BLAS matmul per Arrow batch, shipping only
+    (id, vector) to Python.
 
-    The JVM fold shape (srp_bucket) costs ~0.65 µs per (element ×
-    plane) interpreted step — 1.7 s just to bucket 20k × 64-dim vectors
-    across 4 × 8 planes at sf1.0; the batched matmul is two orders of
-    magnitude cheaper and the Arrow transfer ships only (id, vec).
-
-    Cross-engine safety (why a float-order change is admissible HERE
-    and not in the cosine re-rank): bucket bits are SIGN decisions, and
-    the engine-vs-oracle comparison is already cross-operation-order
-    (DuckDB recomputes the projections with its own sum order). The
-    decision margins are audited per corpus: min |projection| over
-    every (vector, plane) pair = 9.4e-6 at sf0.1 and 1.05e-6 at sf1.0
-    (8- and 12-bit plane sets, planted 1.5x copies included — r6
-    audit), seven orders of magnitude above the ~1e-13 reordering noise
-    of a 64-term dot product. Downstream, the exact cosine re-rank /
-    verify stays in the JVM fold — bit-identical as before."""
+    The float summation order differs from the DuckDB oracle's, which
+    is safe because a bucket bit is a SIGN decision: the gate corpora's
+    smallest |projection| is seven or more orders of magnitude above
+    the ~1e-13 reordering noise of a 64-term dot product
+    (tests/test_ann_margins.py). Scores that reach the output (the
+    cosine re-rank) stay native column expressions."""
     import pyarrow as pa
 
     tables = len(all_planes)
     bits = len(all_planes[0])
+    # 2^i stays exact and the bit sum inside int64 for bits <= 62
+    if bits > 62:
+        raise ValueError(f"srp_buckets_arrow supports at most 62 bits, got {bits}")
     dim = len(all_planes[0][0])
     P = np.concatenate(
         [np.asarray(p, dtype=np.float64) for p in all_planes], axis=0
     )  # (tables*bits, dim)
-    pow2 = (1 << np.arange(bits, dtype=np.int64))
+    pow2 = 1 << np.arange(bits, dtype=np.int64)
     id_type = dict(df.dtypes)[id_col]
-    table_ids_proto = np.arange(tables, dtype=np.int32)
+    table_ids = np.arange(tables, dtype=np.int32)
 
     def fn(batches):
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            ids = batch.column(0).to_numpy(zero_copy_only=False)
-            flat = batch.column(1).flatten().to_numpy(zero_copy_only=False)
-            v = flat.reshape(n, dim)
-            signs = (v @ P.T) > 0  # (n, tables*bits)
-            buckets = signs.reshape(n, tables, bits) @ pow2  # (n, tables)
+        for ids, v in _vector_batches(batches, dim):
+            n = len(ids)
+            buckets = ((v @ P.T) > 0).reshape(n, tables, bits) @ pow2
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(np.repeat(ids, tables)),
-                    pa.array(np.tile(table_ids_proto, n)),
+                    pa.array(np.tile(table_ids, n)),
                     pa.array(buckets.reshape(-1)),
                 ],
                 names=[id_col, "table_id", "bucket"],
@@ -184,31 +153,43 @@ def srp_buckets_arrow(
 
 
 def ivf_cells_arrow(
-    df: DataFrame, id_col: str, vec_col: str, centroids: list[list[float]]
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    centroids: list[list[float]],
+    nprobe: int | None = None,
 ) -> DataFrame:
-    """(id, cell) nearest-centroid assignment — batched matmul + argmax
-    (same rationale and the same audited-margin safety argument as
-    srp_buckets_arrow: the min top1−top2 centroid-score gap over the
-    corpus is 2.3e-5 at sf0.1 / 4.1e-7 at sf1.0 — r6 audit — vs ~1e-13
-    reorder noise; np.argmax and ``array_position(cs, array_max(cs))``
-    both take the FIRST maximum)."""
+    """(id, cell) rows from the centroid dot-product scores, one matmul
+    per Arrow batch.
+
+    ``nprobe=None`` assigns each vector its one nearest cell, the FIRST
+    maximum on ties (corpus side). ``nprobe=n`` emits the n best cells
+    ordered by (score desc, cell desc) (query side). Both tie orders
+    are the ones the DuckDB oracle encodes. Float-order safety is the
+    srp_buckets_arrow argument: the audited top-1/top-2 and nprobe
+    boundary gaps dwarf reordering noise."""
     import pyarrow as pa
 
     C = np.asarray(centroids, dtype=np.float64)
-    dim = C.shape[1]
+    k, dim = C.shape
     id_type = dict(df.dtypes)[id_col]
 
     def fn(batches):
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            ids = batch.column(0).to_numpy(zero_copy_only=False)
-            flat = batch.column(1).flatten().to_numpy(zero_copy_only=False)
-            v = flat.reshape(n, dim)
-            cell = np.argmax(v @ C.T, axis=1).astype(np.int64)
+        for ids, v in _vector_batches(batches, dim):
+            S = v @ C.T
+            if nprobe is None:
+                cells = np.argmax(S, axis=1)[:, None]
+            else:
+                # a stable sort over reversed columns breaks score ties
+                # toward the higher cell
+                order = np.argsort(-S[:, ::-1], axis=1, kind="stable")
+                cells = k - 1 - order[:, :nprobe]
             yield pa.RecordBatch.from_arrays(
-                [pa.array(ids), pa.array(cell)], names=[id_col, "cell"]
+                [
+                    pa.array(np.repeat(ids, cells.shape[1])),
+                    pa.array(cells.reshape(-1).astype(np.int64)),
+                ],
+                names=[id_col, "cell"],
             )
 
     return df.select(id_col, vec_col).mapInArrow(
@@ -232,13 +213,10 @@ def lsh_topk(
     """ANN: candidates share an SRP bucket in at least one of ``tables``
     hyperplane tables; exact cosine re-rank on the candidate set.
 
-    Plan shape (r6): corpus buckets come from ONE Arrow matmul pass
-    (srp_buckets_arrow — ids and buckets only, no payload), the
-    bucket probe joins bare ids, the distinct dedups bare (q_id, id)
-    pairs, and the two vectors are attached once to the surviving
-    candidate set for the EXACT cosine re-rank (which stays in the
-    JVM fold — bit-identical scores). Recall rises with ``tables``;
-    candidate volume falls with ``bits``."""
+    Buckets carry ids only, so the bucket join and the distinct move
+    bare (q_id, id) pairs; the two vectors are attached once to the
+    surviving candidates for the re-rank. Recall rises with
+    ``tables``; candidate volume falls with ``bits``."""
     from .dedup import _rebalance
 
     # tiny-file guard (see dedup._rebalance): the per-vector projection
@@ -256,17 +234,11 @@ def lsh_topk(
     cands = cand_ids.join(vectors.select(id_col, vec_col), id_col).join(
         F.broadcast(queries.select(q_id_col, q_vec_col)), q_id_col
     )
-    scored = cands.withColumn("cos_sim", cosine(F.col(vec_col), F.col(q_vec_col)))
-    w = Window.partitionBy(q_id_col).orderBy(F.desc("cos_sim"), F.asc(id_col))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(q_id_col, id_col, "cos_sim", "rnk")
-    )
+    return _top_k(cands, k, id_col, vec_col, q_id_col, q_vec_col)
 
 
 # ---------------------------------------------------------------------------
-# IVF (inverted-file) ANN — the task brief's alternative scale path
+# IVF (inverted-file) ANN
 # ---------------------------------------------------------------------------
 
 
@@ -286,17 +258,13 @@ def ivf_train_centroids(
     corpus; the corpus-sized work (assignment) stays distributed.
     Returns a (k, dim) list-of-lists, broadcast as a plan literal.
 
-    Sampling (r6, VERDICT r5 #8): the old
-    ``orderBy(xxhash64).limit(n)`` ran a TakeOrdered over the WHOLE
-    corpus — per-row heap maintenance and a per-partition top-n merge
-    at 10^9 vectors. Now a deterministic hash-threshold filter prunes
-    the corpus to ~4x the sample in one narrow codegen pass (hash +
-    compare per row, nothing retained), and only the survivors pay the
-    small ordered-take. Seeded and deterministic like before: the
-    filter and the tie-break ordering are both pure functions of the
-    vector bytes. When the corpus is at most the sample size (or the
-    filter improbably undershoots), it falls back to the full ordered
-    take — identical behavior to the old path on small inputs."""
+    Sampling: a deterministic hash-threshold filter prunes the corpus
+    to ~4x the sample in one narrow codegen pass, so only the survivors
+    pay the ordered take (an ordered take over the whole corpus keeps a
+    per-partition top-n heap for every row). The filter and the
+    tie-break ordering are both pure functions of the vector bytes.
+    When the corpus is at most 4x the sample size (or the filter
+    undershoots), it takes the ordered sample over the whole corpus."""
     import math
 
     h = F.xxhash64(F.col(vec_col).cast("string"))
@@ -349,32 +317,6 @@ def ivf_train_centroids(
     return c.tolist()
 
 
-def ivf_cell(vec_col, centroids: list[list[float]]):
-    """Nearest-centroid id by cosine — ONE fold pass over the vector
-    accumulating all k centroid dot products (same no-CSE-safe shape as
-    srp_bucket), then an argmax over the k-array. Returns an expression
-    usable in select(); the caller must materialize the scores array in
-    a separate projection before argmax (Catalyst does not CSE across
-    higher-order functions)."""
-    # r6 reshape — flat per-centroid folds (same rationale, measurement
-    # and bit-exactness argument as srp_bucket: the nested
-    # array-accumulator fold allocated k-wide arrays per vector
-    # element; one zip_with + scalar fold per centroid does the same
-    # multiplies/adds in the same ascending order with ~8x less
-    # interpreter overhead).
-    scores = []
-    for c in centroids:
-        cent_arr = _const_double_array(c)
-        scores.append(
-            F.aggregate(
-                F.zip_with(vec_col, cent_arr, lambda x, y: x * y),
-                F.lit(0.0),
-                lambda s, v: s + v,
-            )
-        )
-    return F.array(*scores)
-
-
 def ivf_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -390,45 +332,19 @@ def ivf_topk(
     each query probes its ``nprobe`` closest cells; candidates within
     probed cells get an exact cosine re-rank.
 
-    Plan: one shuffle co-locating (cell) on both sides — identical
-    join shape to the LSH and ER blocking stages. Recall rises with
-    ``nprobe``; candidate volume ≈ nprobe/k of the corpus per query."""
+    Same plan shape as lsh_topk: an ids-only cell join against the
+    broadcast query probes, then the vectors attached once for the
+    re-rank. Recall rises with ``nprobe``; candidate volume ≈ nprobe/k
+    of the corpus per query."""
     from .dedup import _rebalance
 
     vectors = _rebalance(vectors, id_col)  # tiny-file guard (no-op at scale)
-    # corpus assignment via one Arrow matmul + argmax per batch (r6;
-    # audited-margin safety argument in ivf_cells_arrow); the vector
-    # payload is re-attached to the ids for the probe join + re-rank
-    v_cells = ivf_cells_arrow(vectors, id_col, vec_col, centroids).join(
-        vectors.select(id_col, vec_col), id_col
+    v_cells = ivf_cells_arrow(vectors, id_col, vec_col, centroids)
+    q_cells = ivf_cells_arrow(queries, q_id_col, q_vec_col, centroids, nprobe)
+    # a vector has one cell and a query's probes are distinct cells,
+    # so each (id, q_id) pair is born once
+    cand_ids = v_cells.join(F.broadcast(q_cells), "cell").select(id_col, q_id_col)
+    cands = cand_ids.join(vectors.select(id_col, vec_col), id_col).join(
+        F.broadcast(queries.select(q_id_col, q_vec_col)), q_id_col
     )
-    q_scored = queries.select(
-        q_id_col, q_vec_col, ivf_cell(F.col(q_vec_col), centroids).alias("cs")
-    )
-    # top-nprobe cells per query: sort (score, idx) structs descending
-    probe = F.slice(
-        F.reverse(
-            F.array_sort(
-                F.zip_with(
-                    "cs",
-                    F.sequence(F.lit(0), F.size("cs") - 1),
-                    lambda s, i: F.struct(s.alias("s"), i.alias("i")),
-                )
-            )
-        ),
-        1,
-        nprobe,
-    )
-    q_cells = q_scored.select(
-        q_id_col, q_vec_col, F.explode(probe).alias("p")
-    ).select(q_id_col, q_vec_col, F.col("p.i").cast("long").alias("cell"))
-    cands = v_cells.join(q_cells, "cell").select(
-        id_col, vec_col, q_id_col, q_vec_col
-    )
-    scored = cands.withColumn("cos_sim", cosine(F.col(vec_col), F.col(q_vec_col)))
-    w = Window.partitionBy(q_id_col).orderBy(F.desc("cos_sim"), F.asc(id_col))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(q_id_col, id_col, "cos_sim", "rnk")
-    )
+    return _top_k(cands, k, id_col, vec_col, q_id_col, q_vec_col)

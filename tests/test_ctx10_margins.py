@@ -16,7 +16,7 @@ Three layers:
    enough to a floor(s*1e9+0.5) jump for drift to flip its cell.
 
 Same doctrine as tests/test_ctx1_margins.py (which this subsumes at
-depth 1) and tools/make_goldens_r4.ann_margin_audit."""
+depth 1) and tests/test_ann_margins.py."""
 
 import math
 import os

@@ -8,8 +8,7 @@ coher = 0) are allowed ON a rounding boundary because both engines
 hold bit-identical doubles there and the gate query matches rounding
 MODE (HALF_UP) across engines.
 
-Same doctrine as tools/make_goldens_r4.ann_margin_audit for the ANN
-oracles."""
+Same doctrine as tests/test_ann_margins.py for the ANN oracles."""
 
 import math
 import os

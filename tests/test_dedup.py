@@ -47,29 +47,30 @@ def test_minhash_near_dup_clusters(docs):
     assert out["3"] != out["5"]
 
 
-def test_signature_estimate_filter_standalone(spark, docs):
-    """The unfused estimate pre-filter API: margin=None derives
-    2/sqrt(num_hashes) from the actual signature length — an exact
-    duplicate pair survives, a dissimilar pair is screened out before
-    any shingle shuffle."""
+def test_signature_estimate_cut_derives_margin(spark, docs):
+    """The fused estimate-and-cut of minhash_lsh_pairs derives its
+    margin 2/sqrt(num_hashes) from the actual signature length — an
+    exact duplicate pair survives, a dissimilar pair is screened out
+    before any shingle shuffle at 64 hashes."""
     pairs = spark.createDataFrame([(0, 1), (0, 3)], "a long, b long")
+
+    def kept(num_hashes):
+        sigs = dedup.minhash_signatures(docs, num_hashes=num_hashes, shingle_n=3)
+        sa = sigs.select(F.col("doc_id").alias("a"), F.col("sig").alias("sig_a"))
+        sb = sigs.select(F.col("doc_id").alias("b"), F.col("sig").alias("sig_b"))
+        cut = dedup._estimate_clears(F.col("sig_a"), F.col("sig_b"), 0.5)
+        return {(r["a"], r["b"])
+                for r in pairs.join(sa, "a").join(sb, "b").filter(cut).collect()}
+
     # k=64: derived margin 2/sqrt(64)=0.25, cut 0.25 — screens the
     # unrelated pair, keeps the exact dup
-    sigs64 = dedup.minhash_signatures(docs, num_hashes=64, shingle_n=3)
-    kept = {(r["a"], r["b"])
-            for r in dedup.signature_estimate_filter(pairs, sigs64, 0.5).collect()}
-    assert (0, 1) in kept       # identical text: estimate 1.0
-    assert (0, 3) not in kept   # unrelated text: estimate ~0
+    kept64 = kept(64)
+    assert (0, 1) in kept64       # identical text: estimate 1.0
+    assert (0, 3) not in kept64   # unrelated text: estimate ~0
     # k=16: derived margin widens to 0.5 (cut 0.0 — keeps borderline
     # pairs a fixed 0.1 margin would wrongly drop at this precision)
-    sigs16 = dedup.minhash_signatures(docs, num_hashes=16, shingle_n=3)
-    kept16 = {(r["a"], r["b"])
-              for r in dedup.signature_estimate_filter(pairs, sigs16, 0.5).collect()}
+    kept16 = kept(16)
     assert (0, 1) in kept16 and (0, 3) in kept16
-    # explicit margin overrides the derivation
-    kept_tight = {(r["a"], r["b"]) for r in dedup.signature_estimate_filter(
-        pairs, sigs16, 0.5, margin=0.1).collect()}
-    assert (0, 1) in kept_tight and (0, 3) not in kept_tight
 
 
 def test_jaccard_verify_bounds(spark, docs):

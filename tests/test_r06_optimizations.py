@@ -4,10 +4,11 @@ Each test pins an optimization whose INTERNALS changed against the
 semantics it must preserve:
 
 - srp_buckets_arrow / ivf_cells_arrow (Arrow matmul decisions) must
-  agree row-for-row with the JVM fold expressions on a corpus whose
-  sign/argmax margins dwarf float-reorder noise (the production
-  corpora are margin-audited; the fixture here is seeded gaussian —
-  margins ~1e-3);
+  agree row-for-row with a pure-Python ``math.fsum`` reference on a
+  seeded gaussian corpus whose sign/argmax margins (~1e-3) dwarf
+  float-reorder noise (the gate corpora's margins are audited in
+  tests/test_ann_margins.py), and keep the oracle's tie orders on
+  exact ties;
 - the min_by rewrite of align_spans/align_gold_tokens must reproduce
   the old window ordering INCLUDING the null edge cases (unaligned
   rows, mixed matched+unmatched groups, overlap ties);
@@ -16,6 +17,8 @@ semantics it must preserve:
 """
 
 from __future__ import annotations
+
+import math
 
 import numpy as np
 import pytest
@@ -29,46 +32,77 @@ def _rand_vecs(spark, n=60, dim=16, seed=3):
     return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
 
-def test_srp_buckets_arrow_matches_jvm_fold(spark):
+def _fsum_dot(a, b):
+    return math.fsum(x * y for x, y in zip(a, b))
+
+
+def test_srp_buckets_arrow_matches_fsum_reference(spark):
     from t_res_spark.operators.similarity_search import (
         _hyperplanes,
-        srp_bucket,
         srp_buckets_arrow,
     )
 
     vecs = _rand_vecs(spark)
     planes = [_hyperplanes(16, 6, seed=42 + t) for t in range(3)]
-    jvm = vecs.select(
-        "vec_id",
-        F.posexplode(
-            F.array(*[srp_bucket(F.col("embedding"), p) for p in planes])
-        ).alias("table_id", "bucket"),
-    )
+    want = {
+        (r["vec_id"], t): sum(
+            1 << b for b, p in enumerate(ps) if _fsum_dot(r["embedding"], p) > 0
+        )
+        for r in vecs.collect()
+        for t, ps in enumerate(planes)
+    }
     arrow = srp_buckets_arrow(vecs, "vec_id", "embedding", planes)
-    j = {(r["vec_id"], r["table_id"]): r["bucket"] for r in jvm.collect()}
-    a = {(r["vec_id"], r["table_id"]): r["bucket"] for r in arrow.collect()}
-    assert j == a and len(a) == 60 * 3
+    got = {(r["vec_id"], r["table_id"]): r["bucket"] for r in arrow.collect()}
+    assert got == want and len(got) == 60 * 3
 
 
-def test_ivf_cells_arrow_matches_jvm_argmax(spark):
+def _ref_cells(vec, cents, nprobe=None):
+    """First maximum for the corpus assignment; (score desc, cell desc)
+    for the query probes — the oracle's two tie orders."""
+    s = [_fsum_dot(vec, c) for c in cents]
+    if nprobe is None:
+        return {s.index(max(s))}
+    return set(sorted(range(len(s)), key=lambda c: (-s[c], -c))[:nprobe])
+
+
+def _cells(df):
+    out = {}
+    for r in df.collect():
+        out.setdefault(r["vec_id"], set()).add(r["cell"])
+    return out
+
+
+def test_ivf_cells_arrow_matches_fsum_reference(spark):
     from t_res_spark.operators.similarity_search import (
         _hyperplanes,
-        ivf_cell,
         ivf_cells_arrow,
     )
 
     vecs = _rand_vecs(spark, seed=9)
     cents = _hyperplanes(16, 5, seed=11)
-    jvm = vecs.select(
-        "vec_id", ivf_cell(F.col("embedding"), cents).alias("cs")
-    ).select(
-        "vec_id",
-        (F.array_position(F.col("cs"), F.array_max("cs")) - 1).alias("cell"),
+    rows = vecs.collect()
+    for nprobe in (None, 1, 3):
+        got = _cells(ivf_cells_arrow(vecs, "vec_id", "embedding", cents, nprobe))
+        want = {r["vec_id"]: _ref_cells(r["embedding"], cents, nprobe) for r in rows}
+        assert got == want, nprobe
+
+
+def test_ivf_cells_arrow_exact_tie_orders(spark):
+    """Duplicated centroids give exact score ties: the corpus side keeps
+    the first maximum, the probe side orders (score desc, cell desc)."""
+    from t_res_spark.operators.similarity_search import ivf_cells_arrow
+
+    cents = [[1.0, 0.0], [0.0, 1.0], [1.0, 0.0], [0.0, 1.0]]
+    vecs = spark.createDataFrame(
+        [(0, [1.0, 0.5])], "vec_id long, embedding array<double>"
     )
-    arrow = ivf_cells_arrow(vecs, "vec_id", "embedding", cents)
-    j = {r["vec_id"]: r["cell"] for r in jvm.collect()}
-    a = {r["vec_id"]: r["cell"] for r in arrow.collect()}
-    assert j == a
+
+    def cells(nprobe):
+        return _cells(ivf_cells_arrow(vecs, "vec_id", "embedding", cents, nprobe))[0]
+
+    assert cells(None) == {0}
+    assert cells(1) == {2}
+    assert cells(3) == {2, 0, 3}
 
 
 def _window_align_spans_reference(pred, gold):

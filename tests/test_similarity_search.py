@@ -83,15 +83,47 @@ def test_lsh_planted_neighbor_recall_floor(spark):
     assert recall >= 0.95, f"planted-neighbor recall@10 = {recall:.3f} over {n_q}"
 
 
-def test_srp_bucket_rejects_overflow_bits():
+def test_srp_bucket_rejects_overflow_bits(vectors):
     """bits > 62 would overflow the int64 bucket-id accumulation —
     must fail loudly, not corrupt bucket ids (ADVICE r02)."""
-    import pytest
-
-    from t_res_spark.operators.similarity_search import _hyperplanes, srp_bucket
-
     with pytest.raises(ValueError, match="62 bits"):
-        srp_bucket(F.col("v"), _hyperplanes(4, 64, seed=1))
+        ss.srp_buckets_arrow(
+            vectors, "vec_id", "embedding", [ss._hyperplanes(8, 64, seed=1)]
+        )
+
+
+def test_ann_skips_null_and_ragged_vectors(spark):
+    """Null, wrong-width and null-element vectors get no bucket or cell:
+    the ANN paths do not crash on them, never return them, and the
+    embedding near-dup clusters keep them as singletons."""
+    import numpy as np
+
+    from t_res_spark.operators.dedup import embedding_near_duplicates
+
+    rng = np.random.RandomState(4)
+    good = rng.normal(size=(6, 4))
+    rows = [(i, [float(x) for x in good[i]]) for i in range(6)]
+    rows[5] = (5, [float(x * 2.0) for x in good[0]])  # scaled copy of 0
+    bad = [(6, None), (7, [1.0, 2.0]), (8, [1.0, None, 0.5, 0.25])]
+    vecs = spark.createDataFrame(rows + bad, "vec_id long, embedding array<double>")
+    queries = vecs.select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
+    )
+    bad_ids = {6, 7, 8}
+
+    lsh = ss.lsh_topk(vecs, queries, dim=4, k=3, bits=4, tables=4).collect()
+    cents = ss._hyperplanes(4, 3, seed=5)
+    ivf = ss.ivf_topk(vecs, queries, cents, k=3, nprobe=3).collect()
+    for got in (lsh, ivf):
+        assert {r["q_id"] for r in got} == set(range(6))
+        assert not {r["vec_id"] for r in got} & bad_ids
+
+    clusters = {
+        int(r["doc_id"]): r["dup_cluster"]
+        for r in embedding_near_duplicates(vecs, threshold=0.99, dim=4).collect()
+    }
+    assert clusters[0] == clusters[5] == "0"
+    assert all(clusters[i] == str(i) for i in bad_ids)
 
 
 def test_cosine_matches_numpy(spark, vectors):
@@ -153,16 +185,16 @@ def test_ivf_candidate_volume_bounded(spark):
     contract: candidate volume shrinks with k)."""
     import numpy as np
 
-    from t_res_spark.operators.similarity_search import ivf_cell, ivf_train_centroids
-    from pyspark.sql import functions as F
+    from t_res_spark.operators.similarity_search import (
+        ivf_cells_arrow,
+        ivf_train_centroids,
+    )
 
     rng = np.random.RandomState(9)
     rows = [(i, [float(x) for x in rng.normal(size=8)]) for i in range(400)]
     vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     cents = ivf_train_centroids(vecs, k=8, sample_size=400, seed=1)
-    cells = vecs.select(
-        ivf_cell(F.col("embedding"), cents).alias("cs")
-    ).select((F.array_position(F.col("cs"), F.array_max("cs")) - 1).alias("cell"))
+    cells = ivf_cells_arrow(vecs, "vec_id", "embedding", cents)
     sizes = [r["n"] for r in cells.groupBy("cell").agg(F.count("*").alias("n")).collect()]
     assert len(sizes) >= 4           # centroids actually used
     assert max(sizes) < 400 * 0.6    # no degenerate single cell

@@ -304,54 +304,6 @@ def ann_ivf_oracle_sql(**kw) -> str:
     return entry._ann_ivf_oracle_sql(**kw)
 
 
-def ann_margin_audit(bits: int = 8, tables: int = 4, seed: int = 42) -> None:
-    """Assert the cross-engine float-safety margins that make the
-    ann_lsh SQL oracle deterministic: every SRP projection and every
-    adjacent top-30 cosine gap must sit far above ~1e-13 ulp noise."""
-    import numpy as np
-    import pandas as pd
-
-    from t_res_spark.operators.similarity_search import _hyperplanes
-
-    # sf0.1 included after the ctx1 exact-tie lesson (round 5): the
-    # audited-margin doctrine is only as good as the scales it audits
-    for sf in ("0.001", "0.01", "0.1"):
-        emb = pd.read_parquet(f"/root/testdata/sf{sf}/embeddings.parquet")
-        V = np.array([np.array(list(v), dtype=np.float64)
-                      for v in emb["embedding"]])
-        dim = V.shape[1]
-        min_abs = min(
-            float(np.abs(V @ np.array(_hyperplanes(dim, bits, seed + t)).T).min())
-            for t in range(tables)
-        )
-        assert min_abs > 1e-9, (sf, min_abs)
-        Vn = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
-        for q in range(3):
-            s = np.sort(Vn @ Vn[q])[::-1]
-            gap = float(np.abs(np.diff(s[:30])).min())
-            assert gap > 1e-9, (sf, q, gap)
-        # IVF margins: cell-argmax gap per vector, nprobe boundary gap
-        # per query, and re-rank gaps within probed candidate sets
-        import __spark_entry__ as entry_mod
-
-        C = np.asarray(entry_mod._ivf_fixture_centroids(dim))
-        S = V @ C.T  # (n, k) raw dot scores — exactly ivf_cell's math
-        srt = np.sort(S, axis=1)[:, ::-1]
-        cell_gap = float((srt[:, 0] - srt[:, 1]).min())
-        assert cell_gap > 1e-9, (sf, cell_gap)
-        probe_gap = float((srt[:3, 2] - srt[:3, 3]).min())
-        assert probe_gap > 1e-9, (sf, probe_gap)
-        vcell = S.argmax(axis=1)
-        for q in range(3):
-            probes = set(np.argsort(-S[q])[:3])
-            cand = [i for i in range(len(V)) if vcell[i] in probes]
-            cos = np.sort(Vn[cand] @ Vn[q])[::-1]
-            rgap = float(np.abs(np.diff(cos[:12])).min())
-            assert rgap > 1e-9, (sf, q, rgap)
-        print(f"sf{sf}: min|proj|={min_abs:.3e} cell_gap={cell_gap:.3e} "
-              f"probe_gap={probe_gap:.3e}  (audit ok)")
-
-
 def typed_values_sql(rows, cols, casts) -> str:
     """VALUES wrapped in an outer SELECT with explicit column casts so
     DuckDB's literal-type inference (INTEGER for small ints) cannot
@@ -387,7 +339,6 @@ if __name__ == "__main__":
     print(typed_values_sql(
         d3b_expected(), ["a", "b", "hamming"], ["BIGINT", "BIGINT", "INTEGER"]
     ))
-    ann_margin_audit()
     print("\n-- ann_lsh_topk oracle:")
     print(ann_lsh_oracle_sql())
     print("\n-- ann_ivf_topk oracle:")
