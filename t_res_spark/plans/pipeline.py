@@ -1,20 +1,36 @@
 """The end-to-end entity-resolution plan.
 
-Spark restatement of the reference's ``Pipeline.run_text`` /
-``Experiment`` flow (/root/reference/geoparser/pipeline.py:387-490,
-/root/reference/experiments/experiment.py:159-813):
+Spark restatement of T-Res's ``Pipeline.run_text`` / ``Experiment`` flow
+(geoparser/pipeline.py:387-490, experiments/experiment.py:159-813):
 
     transcripts → (extract UDF) → mentions → distinct surfaces
       → (blocking join + batched scoring) → candidates
       → (linking agg) → predictions → (decoration joins)
       → clusters via connected components → checkpoint tables
 
-Each stage is a composable DataFrame→DataFrame function (the modular
-three-call flow of pipeline.py:538-889 / the HTTP API seams), so tests
-can cut in at any seam. When a ``CheckpointCatalog`` is supplied, every
-stage output is persisted keyed by a deterministic config hash and the
-pipeline resumes from the last completed stage (experiment.py:133-157
-analog) — kill it between stages and it picks up where it left off.
+Each stage is a composable DataFrame→DataFrame function, so tests can
+cut in at any seam. With a ``CheckpointCatalog`` every stage is written
+as a table keyed by a deterministic config hash, and a rerun resumes
+from the last completed stage (experiment.py:133-157): kill it between
+stages and it picks up where it left off.
+
+Without a catalog three stages are cut:
+
+- ``mentions`` is persisted: the surfaces stage and the link join both
+  read it, and without the cache the extraction UDF would run once per
+  reader. The surfaces write is the job that fills the cache.
+- ``surfaces`` is written to parquet: the candidate stage reads it three
+  times (exact hits, the missed-surface anti-join, the blocked pairs),
+  and without a cut each read embeds a copy of the extract subtree.
+- ``predictions`` is written to parquet: a join chain's size estimate is
+  the product of its inputs, so the one-row-per-surface table never
+  looks small to Catalyst. Backed by files it carries real size
+  statistics, and the link join broadcasts it without a hint.
+
+Parquet rather than ``localCheckpoint``, because an RDD scan has unknown
+size statistics and would demote those joins to sort-merge joins. Both
+parquet cuts go through ``sources.tables.write_stage`` into one scratch
+directory per run, which ``PipelineResult.unpersist()`` removes.
 """
 
 from __future__ import annotations
@@ -30,22 +46,32 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..operators import clustering, extraction, linking, ranking
-from ..sources.tables import CheckpointCatalog
+from ..sources.tables import CheckpointCatalog, hadoop_fs, write_stage
 
-# Outstanding scratch dirs, removed at interpreter exit as a backstop
-# (ADVICE r4: a resolve() that raises mid-pipeline, or a caller that
-# never calls PipelineResult.unpersist(), must not leak stage files).
+# (path, remover) of every run scratch dir still on storage, removed at
+# interpreter exit as a backstop for a caller that never calls
+# PipelineResult.unpersist().
 _LIVE_SCRATCH: list = []
+
+
+def _drop_scratch(scratch: tuple | None) -> None:
+    if scratch is None:
+        return
+    path, remover = scratch
+    try:
+        remover(path, ignore_errors=True)
+    except Exception:
+        pass
+    try:
+        _LIVE_SCRATCH.remove(scratch)
+    except ValueError:
+        pass
 
 
 @atexit.register
 def _cleanup_scratch_atexit() -> None:
-    for path, remover in list(_LIVE_SCRATCH):
-        try:
-            remover(path, ignore_errors=True)
-        except Exception:
-            pass
-    _LIVE_SCRATCH.clear()
+    for scratch in list(_LIVE_SCRATCH):
+        _drop_scratch(scratch)
 
 
 def _hadoop_remover(spark: SparkSession):
@@ -55,9 +81,7 @@ def _hadoop_remover(spark: SparkSession):
 
     def remove(path: str, ignore_errors: bool = True) -> None:
         try:
-            jvm = spark._jvm
-            hpath = jvm.org.apache.hadoop.fs.Path(path)
-            fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+            fs, hpath = hadoop_fs(spark, path)
             fs.delete(hpath, True)
         except Exception:
             if not ignore_errors:
@@ -66,13 +90,13 @@ def _hadoop_remover(spark: SparkSession):
     return remove
 
 
-def _scratch_dir(spark: SparkSession, name: str):
-    """(path, remover) for a session-temp stage table.
+def _scratch_dir(spark: SparkSession):
+    """(path, remover) for one run's scratch dir.
 
     Executors perform parquet writes, so on any multi-node deployment
-    the scratch path MUST be on storage every executor and the driver
-    share (ADVICE r4 — a driver-local tempdir silently breaks off
-    local mode). Resolution order:
+    the scratch path must be on storage every executor and the driver
+    share; a driver-local tempdir silently breaks off local mode.
+    Resolution order:
 
     1. ``spark.tres.scratchDir`` — explicit spark-visible scratch root
        (any Hadoop-FS scheme);
@@ -80,6 +104,8 @@ def _scratch_dir(spark: SparkSession, name: str):
        be shared storage by Spark's own checkpoint contract);
     3. a driver-local tempdir — **only** under a ``local[*]`` master,
        where driver and executors share a filesystem by construction;
+       its remover is ``shutil``, which still works after the JVM is
+       gone (the atexit backstop);
     otherwise raise with instructions rather than corrupt silently.
     """
     root = spark.conf.get("spark.tres.scratchDir", None)
@@ -89,13 +115,13 @@ def _scratch_dir(spark: SparkSession, name: str):
         except Exception:
             root = None
     if root:
-        path = f"{str(root).rstrip('/')}/tres_{name}_{uuid.uuid4().hex[:12]}"
+        path = f"{str(root).rstrip('/')}/tres_run_{uuid.uuid4().hex[:12]}"
         return path, _hadoop_remover(spark)
     if spark.sparkContext.master.startswith("local"):
         def _rm(path: str, ignore_errors: bool = True) -> None:
             shutil.rmtree(path, ignore_errors=ignore_errors)
 
-        return tempfile.mkdtemp(prefix=f"tres_{name}_"), _rm
+        return tempfile.mkdtemp(prefix="tres_run_"), _rm
     raise RuntimeError(
         "resolve() needs a spark-visible scratch dir for stage tables on "
         "a non-local master: set spark.tres.scratchDir (shared storage) "
@@ -109,8 +135,6 @@ class PipelineConfig:
     (pipeline.py:95-106 defaults: perfectmatch + mostpopular; our
     default is the fuzzy DeezyMatch-analog ranker)."""
 
-    # extra keys: 'bucketed_stage_prefix' → persist the label-join
-    # inputs bucketed on `mention` (exchange-free resume, VERDICT r4 #8)
     # perfectmatch|partialmatch|levenshtein|embcosine|fuzzy|jarowinkler
     ranking_method: str = "fuzzy"
     linking_method: str = "mostpopular"  # mostpopular|bydistance
@@ -138,89 +162,22 @@ class PipelineResult:
     linked: DataFrame
     clusters: DataFrame
     metrics: DataFrame
-    # (path, remover) pairs for session-temp stage materializations
-    temp_paths: list = field(default_factory=list)
+    # (path, remover) of the run's scratch dir; None under a catalog
+    scratch: tuple | None = None
 
     def unpersist(self) -> None:
-        """Release the persisted shared stages (mentions/linked) and
-        delete session-temp stage files — call when done with the
-        result in a long-lived session. (An atexit backstop removes
-        anything still outstanding, and resolve() itself cleans up on
-        a mid-pipeline exception — ADVICE r4.)"""
+        """Release the persisted shared stages and delete the run's
+        scratch dir — call when done with the result in a long-lived
+        session. (The atexit backstop removes anything still
+        outstanding, and resolve() itself cleans up when a stage
+        raises.)"""
         for df in (self.mentions, self.linked):
             try:
                 df.unpersist()
             except Exception:
                 pass
-        _drop_scratch(self.temp_paths)
-        self.temp_paths = []
-
-
-def _drop_scratch(paths: list) -> None:
-    for path, remover in paths:
-        try:
-            remover(path, ignore_errors=True)
-        except Exception:
-            pass
-        try:
-            _LIVE_SCRATCH.remove((path, remover))
-        except ValueError:
-            pass
-
-
-def persist_bucketed_stages(
-    spark: SparkSession,
-    mentions: DataFrame,
-    predictions: DataFrame,
-    table_prefix: str,
-    num_buckets: int = 32,
-) -> tuple[DataFrame, DataFrame]:
-    """SCALE.md stage-5 alternative (VERDICT r4 #8): persist the two
-    label-join inputs bucketed (and bucket-sorted) on ``mention`` so a
-    RESUMED session joins them with no Exchange and no Sort on either
-    side. At target scale the mention-instance table is the widest
-    thing the pipeline touches; when the per-surface predictions table
-    outgrows broadcast range this turns the label join from a
-    two-sided instance shuffle into a bucket-local merge. Returns the
-    bucket-backed reads."""
-    from ..sources.tables import write_bucketed
-
-    write_bucketed(
-        mentions, f"{table_prefix}_mentions", ["mention"],
-        num_buckets=num_buckets, sort_cols=["mention"],
-    )
-    write_bucketed(
-        predictions, f"{table_prefix}_predictions", ["mention"],
-        num_buckets=num_buckets, sort_cols=["mention"],
-    )
-    return (
-        spark.table(f"{table_prefix}_mentions"),
-        spark.table(f"{table_prefix}_predictions"),
-    )
-
-
-def resume_from_bucketed(
-    spark: SparkSession,
-    table_prefix: str,
-    entities: DataFrame | None = None,
-) -> PipelineResult:
-    """Resume the tail of the pipeline (label join → clusters →
-    metrics) from bucketed stage tables written by a prior
-    ``resolve(..., config=PipelineConfig(extra={'bucketed_stage_prefix':
-    …}))`` run — the link join is exchange-free by bucketing (plan
-    test: test_pipeline_e2e::test_bucketed_resume_no_exchange)."""
-    mentions = spark.table(f"{table_prefix}_mentions")
-    predictions = spark.table(f"{table_prefix}_predictions")
-    linked = linking.link_mentions(mentions, predictions, entities)
-    clusters = clustering.cluster_mentions(linked)
-    return PipelineResult(
-        mentions=mentions,
-        candidates=predictions,
-        predictions=predictions,
-        linked=linked,
-        clusters=clusters,
-        metrics=stage_metrics(spark, clusters),
-    )
+        _drop_scratch(self.scratch)
+        self.scratch = None
 
 
 def blocking_metrics(surfaces: DataFrame) -> DataFrame:
@@ -274,21 +231,25 @@ def resolve(
     """Run the full ER pipeline; every stage checkpointable/resumable."""
     cfg = config or PipelineConfig()
     cfg_d = cfg.as_dict()
-    _cleanup_paths: list = []
+    scratch = None
+    if catalog is None:
+        scratch = _scratch_dir(spark)
+        _LIVE_SCRATCH.append(scratch)
 
-    def _stage(name: str, thunk, persist: bool = False):
-        if catalog is None:
-            df = thunk()
-            if persist:
-                # mentions/linked feed several DAG branches; without a
-                # checkpoint table the extraction UDF would re-run per
-                # branch — persist the shared subtree instead
-                df = df.persist(StorageLevel.MEMORY_AND_DISK)
-            return df
-        return catalog.materialize(thunk, name, cfg_d)
+    def _stage(name: str, thunk, cut: str | None = None) -> DataFrame:
+        """Resume-or-compute under a catalog; without one, apply the
+        stage's cut ('persist' or 'parquet', see the module docstring)."""
+        if catalog is not None:
+            return catalog.materialize(thunk, name, cfg_d)
+        df = thunk()
+        if cut == "persist":
+            return df.persist(StorageLevel.MEMORY_AND_DISK)
+        if cut == "parquet":
+            return write_stage(df, f"{scratch[0]}/{name}")
+        return df
 
     def _extract():
-        # opt-in script-agnostic extraction (r5): union the cased rule
+        # opt-in script-agnostic extraction: union the cased rule
         # tagger with the gazetteer-anchored uncased tagger, the alias
         # KB serving as the gazetteer. Flag-gated (not default) for
         # batch cost discipline: the uncased branch adds a second
@@ -301,73 +262,6 @@ def resolve(
             return extract_mentions_full(transcripts, aliases, alias_col="alias")
         return extraction.extract_mentions(transcripts)
 
-    mentions = _stage("mentions", _extract, persist=True)
-
-    # Materialize the tiny distinct-surface table eagerly TO PARQUET:
-    # the candidate stage references it three times (exact / missed
-    # anti-join / blocked pairs), and without a cut each reference
-    # embeds a full copy of the extract subtree — tripling Catalyst
-    # analysis/codegen work and forcing three extra passes over the
-    # cached mention instances (measured: ~3s of the fixed serial floor
-    # at 5M turns). Parquet rather than localCheckpoint on purpose: an
-    # RDD-scan has UNKNOWN size statistics (defaultSizeInBytes), which
-    # silently demotes every downstream join (predictions → link) from
-    # a static broadcast to SMJ — a parquet-backed stage exposes real
-    # file statistics, so Catalyst keeps broadcasting the per-surface
-    # side without any forced hint (measured: removes a full instance
-    # shuffle + a single-task join from the count path). The
-    # materialization job also populates the mentions persist cache.
-    # |surfaces| is the distinct-surface domain — small by construction
-    # (ranking.py:674 rationale).
-    def _materialize_small(df: DataFrame, name: str) -> DataFrame:
-        if catalog is not None:
-            return catalog.materialize(df, name, cfg_d)
-        tmp, remover = _scratch_dir(spark, name)
-        # No forced coalesce(1) (VERDICT r4 #5): the input arrives from
-        # a shuffle, so AQE's partition coalescing already sizes the
-        # write — one file for a sandbox-scale table, many for the
-        # ~10^8-surface table SCALE.md budgets at target scale. A
-        # single-task write there would be the bottleneck; a
-        # parquet-backed table with real file stats is what we need,
-        # and that is partition-count-independent.
-        df.write.mode("overwrite").parquet(tmp)
-        _cleanup_paths.append((tmp, remover))
-        _LIVE_SCRATCH.append((tmp, remover))
-        # explicit schema: skips the read-back footer-inference job —
-        # one fewer serial job per materialized stage
-        return spark.read.schema(df.schema).parquet(tmp)
-
-    try:
-        return _resolve_stages(
-            spark, mentions, aliases, embeddings_kb, entities, origins,
-            cfg, catalog, cfg_d, _stage, _materialize_small, _cleanup_paths,
-        )
-    except BaseException:
-        # a stage raised mid-pipeline: release scratch now instead of
-        # leaking it until interpreter exit (ADVICE r4)
-        _drop_scratch(_cleanup_paths)
-        raise
-
-
-def _resolve_stages(
-    spark, mentions, aliases, embeddings_kb, entities, origins,
-    cfg, catalog, cfg_d, _stage, _materialize_small, _cleanup_paths,
-) -> PipelineResult:
-    surfaces = _materialize_small(extraction.distinct_mentions(mentions), "surfaces")
-
-    candidates = _stage(
-        "candidates",
-        lambda: ranking.find_candidates(
-            surfaces,
-            aliases,
-            embeddings_kb=embeddings_kb,
-            method=cfg.ranking_method,
-            threshold=cfg.fuzzy_threshold,
-            top_k=cfg.top_k,
-            salt_factor=cfg.salt_factor,
-        ),
-    )
-
     def _predict():
         if cfg.linking_method == "mostpopular":
             return linking.most_popular(candidates)
@@ -376,52 +270,37 @@ def _resolve_stages(
             return linking.by_distance(candidates, entities, origins)
         raise ValueError(f"unknown linking method: {cfg.linking_method}")
 
-    # Predictions (one row per distinct surface) is materialized like
-    # surfaces, and for the same reason: a join-chain's static size
-    # estimate is a product of its inputs, so the per-surface table can
-    # never LOOK small to Catalyst however small it is — backed by a
-    # real file it carries true statistics and the link join broadcasts
-    # statically (no hint), turning the label/count path into a single
-    # narrow pass over the cached mentions. This is also the natural
-    # resume surface: with a catalog it is exactly the predictions
-    # checkpoint table.
-    if catalog is None:
-        predictions = _materialize_small(_predict(), "predictions")
-    else:
-        predictions = _stage("predictions", _predict)
-
-    # Opt-in bucketed persistence of the label-join inputs (VERDICT r4
-    # #8): both sides land bucketed+sorted on `mention`, so THIS run's
-    # label join and any `resume_from_bucketed` session run it with no
-    # Exchange/Sort on either side.
-    bucket_prefix = cfg.extra.get("bucketed_stage_prefix")
-    if bucket_prefix:
-        cached_mentions = mentions
-        mentions, predictions = persist_bucketed_stages(
-            spark, mentions, predictions, bucket_prefix
+    try:
+        mentions = _stage("mentions", _extract, cut="persist")
+        surfaces = _stage(
+            "surfaces", lambda: extraction.distinct_mentions(mentions), cut="parquet"
         )
-        # the bucketed write just consumed the persisted mentions
-        # stage and everything downstream (label join, result fields)
-        # reads the bucket-backed tables — release the cache NOW;
-        # deferring to PipelineResult.unpersist() would leak it, since
-        # that handle now points at the bucket read
-        try:
-            cached_mentions.unpersist()
-        except Exception:
-            pass
-
-    # linked is NOT persisted: it re-derives from the cached mentions
-    # with one cheap broadcast join per consuming branch, while caching
-    # it would double the memory footprint of the widest table.
-    linked = _stage(
-        "linked", lambda: linking.link_mentions(mentions, predictions, entities)
-    )
-
-    clusters = _stage("clusters", lambda: clustering.cluster_mentions(linked))
-
-    metrics = stage_metrics(spark, clusters)
-    if catalog is not None:
-        metrics = catalog.materialize(metrics, "metrics", cfg_d)
+        candidates = _stage(
+            "candidates",
+            lambda: ranking.find_candidates(
+                surfaces,
+                aliases,
+                embeddings_kb=embeddings_kb,
+                method=cfg.ranking_method,
+                threshold=cfg.fuzzy_threshold,
+                top_k=cfg.top_k,
+                salt_factor=cfg.salt_factor,
+            ),
+        )
+        predictions = _stage("predictions", _predict, cut="parquet")
+        # linked is not persisted: it re-derives from the cached mentions
+        # with one cheap broadcast join per consuming branch, while
+        # caching it would double the memory footprint of the widest
+        # table.
+        linked = _stage(
+            "linked", lambda: linking.link_mentions(mentions, predictions, entities)
+        )
+        clusters = _stage("clusters", lambda: clustering.cluster_mentions(linked))
+        metrics = _stage("metrics", lambda: stage_metrics(spark, clusters))
+    except BaseException:
+        # a stage raised: remove the run's scratch now, not at exit
+        _drop_scratch(scratch)
+        raise
 
     return PipelineResult(
         mentions=mentions,
@@ -430,5 +309,5 @@ def _resolve_stages(
         linked=linked,
         clusters=clusters,
         metrics=metrics,
-        temp_paths=_cleanup_paths,
+        scratch=scratch,
     )

@@ -12,9 +12,9 @@ read-if-exists unless ``overwrite`` is set.
 Format: Iceberg when an Iceberg catalog is configured on the session
 (``spark.sql.catalog.<name>`` — the production path: atomic snapshot
 commits, time travel for lineage); otherwise plain parquet directories
-with an atomic ``_TRES_COMMIT`` marker written after the data — the
-sandbox fallback (no Iceberg runtime jar is available offline). Both
-paths expose the same read/write API so the pipeline code is identical.
+written by ``write_stage``, which drops a ``_TRES_COMMIT`` marker after
+the data. Both paths expose the same read/write API so the pipeline code
+is identical.
 """
 
 from __future__ import annotations
@@ -39,9 +39,36 @@ def _iceberg_catalog(spark: SparkSession) -> str | None:
     return None
 
 
+_COMMIT_MARKER = "_TRES_COMMIT"
+
+
+def hadoop_fs(spark: SparkSession, path: str):
+    """(FileSystem, Path) for ``path`` through the Hadoop FileSystem API,
+    so plain paths and URIs (file://, hdfs://, s3a://, …) all resolve to
+    the storage they name."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
+def write_stage(df: DataFrame, path: str) -> DataFrame:
+    """Write one stage table to parquet at ``path``, mark it committed,
+    and return the parquet-backed read.
+
+    The ``_TRES_COMMIT`` marker goes down only after the data write
+    succeeded, so a run killed mid-write never looks resumable. The
+    read-back passes ``df.schema`` explicitly, which skips the footer
+    schema-inference job. A parquet-backed table also carries real file
+    size statistics, which is what lets Catalyst broadcast a small
+    stage on the far side of a join."""
+    df.write.mode("overwrite").parquet(path)
+    fs, marker = hadoop_fs(df.sparkSession, f"{path}/{_COMMIT_MARKER}")
+    fs.create(marker, True).close()
+    return df.sparkSession.read.schema(df.schema).parquet(path)
+
+
 class CheckpointCatalog:
-    """Stage-table catalog rooted at a directory (parquet mode) or an
-    Iceberg namespace (cluster mode)."""
+    """Stage-table catalog rooted at a directory or URI (parquet mode) or
+    an Iceberg namespace (cluster mode)."""
 
     def __init__(self, spark: SparkSession, root: str, overwrite: bool = False):
         self.spark = spark
@@ -50,27 +77,29 @@ class CheckpointCatalog:
         self.iceberg = _iceberg_catalog(spark)
 
     def _path(self, name: str, cfg_hash: str) -> str:
-        return os.path.join(self.root, f"{name}_{cfg_hash}")
+        return f"{self.root.rstrip('/')}/{name}_{cfg_hash}"
+
+    def _table(self, name: str, cfg_hash: str) -> str:
+        return f"{self.iceberg}.tres.{name}_{cfg_hash}"
 
     def exists(self, name: str, cfg_hash: str) -> bool:
         if self.iceberg:
-            return self.spark.catalog.tableExists(
-                f"{self.iceberg}.tres.{name}_{cfg_hash}"
-            )
-        return os.path.exists(os.path.join(self._path(name, cfg_hash), "_TRES_COMMIT"))
+            return self.spark.catalog.tableExists(self._table(name, cfg_hash))
+        fs, marker = hadoop_fs(
+            self.spark, f"{self._path(name, cfg_hash)}/{_COMMIT_MARKER}"
+        )
+        return fs.exists(marker)
 
-    def write(self, df: DataFrame, name: str, cfg_hash: str) -> None:
+    def write(self, df: DataFrame, name: str, cfg_hash: str) -> DataFrame:
+        """Persist ``df`` as the stage table and return its read."""
         if self.iceberg:
-            df.writeTo(f"{self.iceberg}.tres.{name}_{cfg_hash}").createOrReplace()
-            return
-        path = self._path(name, cfg_hash)
-        df.write.mode("overwrite").parquet(path)
-        with open(os.path.join(path, "_TRES_COMMIT"), "w") as f:
-            f.write(cfg_hash)
+            df.writeTo(self._table(name, cfg_hash)).createOrReplace()
+            return self.read(name, cfg_hash)
+        return write_stage(df, self._path(name, cfg_hash))
 
     def read(self, name: str, cfg_hash: str) -> DataFrame:
         if self.iceberg:
-            return self.spark.table(f"{self.iceberg}.tres.{name}_{cfg_hash}")
+            return self.spark.table(self._table(name, cfg_hash))
         return self.spark.read.parquet(self._path(name, cfg_hash))
 
     def materialize(
@@ -82,8 +111,7 @@ class CheckpointCatalog:
         if not self.overwrite and self.exists(name, h):
             return self.read(name, h)
         df = df_thunk() if callable(df_thunk) else df_thunk
-        self.write(df, name, h)
-        return self.read(name, h)
+        return self.write(df, name, h)
 
 
 def read_fixture(spark: SparkSession, fixture_dir: str, name: str) -> DataFrame:
@@ -145,9 +173,7 @@ def write_bucketed(
                 rel = parts[0]
             else:
                 rel = f"{parts[-2]}.db/{parts[-1]}"
-            jvm = spark._jvm
-            hpath = jvm.org.apache.hadoop.fs.Path(f"{warehouse}/{rel}")
-            fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+            fs, hpath = hadoop_fs(spark, f"{warehouse}/{rel}")
             if fs.exists(hpath):
                 looks_like_table = False
                 for st in fs.listStatus(hpath):

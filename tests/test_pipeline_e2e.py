@@ -2,6 +2,8 @@
 the single-process oracle exactly, and hit pairwise F1 >= 0.99 on the
 generator's planted ground truth (BASELINE.json metric)."""
 
+import os
+
 import pandas as pd
 import pytest
 
@@ -37,19 +39,54 @@ def test_pairwise_f1_against_planted_truth(spark, tiny_fx, tiny_dir):
     assert stats["f1"] >= 0.99, stats
 
 
-def test_resume_from_checkpoint(spark, tiny_dir, tmp_path):
+@pytest.mark.parametrize("root_kind", ["path", "uri"])
+def test_resume_from_checkpoint(spark, tiny_dir, tmp_path, root_kind):
     """Kill-between-stages resumability (experiment.py:133-157 analog):
     a catalog-backed run persists stage tables; a second run must reuse
-    them (same config hash) and produce identical clusters."""
-    cat = CheckpointCatalog(spark, str(tmp_path / "ckpt"))
+    them (same config hash) and produce identical clusters. The catalog
+    root may be a plain path or a URI (file://, hdfs://, s3a://, …)."""
+    ckpt = tmp_path / "ckpt"
+    root = str(ckpt) if root_kind == "path" else ckpt.as_uri()
+    cat = CheckpointCatalog(spark, root)
     r1 = _spark_clusters(spark, tiny_dir, catalog=cat)
     c1 = sorted(map(tuple, r1.clusters.select("mention_id", "cluster_id").collect()))
     assert cat.exists("mentions", _cfg_hash()) and cat.exists("clusters", _cfg_hash())
+    assert os.path.exists(ckpt / f"clusters_{_cfg_hash()}" / "_TRES_COMMIT")
     # resume: stage tables exist → read, not recompute
-    cat2 = CheckpointCatalog(spark, str(tmp_path / "ckpt"))
+    cat2 = CheckpointCatalog(spark, root)
     r2 = _spark_clusters(spark, tiny_dir, catalog=cat2)
     c2 = sorted(map(tuple, r2.clusters.select("mention_id", "cluster_id").collect()))
     assert c1 == c2
+
+
+def test_scratch_dir_lifecycle(spark, tiny_dir, tmp_path):
+    """Without a catalog a run writes its parquet stages under ONE
+    scratch dir on the configured scratch root; unpersist() deletes it,
+    and a stage that raises deletes it before the error propagates."""
+    transcripts = read_fixture(spark, tiny_dir, "transcripts")
+    aliases = read_fixture(spark, tiny_dir, "aliases")
+    prev = spark.conf.get("spark.tres.scratchDir", None)
+    spark.conf.set("spark.tres.scratchDir", str(tmp_path))
+    try:
+        res = resolve(spark, transcripts, aliases)
+        runs = os.listdir(tmp_path)
+        assert len(runs) == 1 and runs[0].startswith("tres_run_"), runs
+        assert sorted(os.listdir(tmp_path / runs[0])) == ["predictions", "surfaces"]
+        assert res.clusters.count() > 0
+        res.unpersist()
+        assert os.listdir(tmp_path) == []
+
+        with pytest.raises(ValueError, match="unknown linking method"):
+            resolve(
+                spark, transcripts, aliases,
+                config=PipelineConfig(linking_method="bogus"),
+            )
+        assert os.listdir(tmp_path) == []
+    finally:
+        if prev is None:
+            spark.conf.unset("spark.tres.scratchDir")
+        else:
+            spark.conf.set("spark.tres.scratchDir", prev)
 
 
 def _cfg_hash():
@@ -102,49 +139,3 @@ def test_config_dispatch_all_ranking_methods(spark, tiny_dir):
             # must agree on (exact match short-circuits identically)
             for k, v in base.items():
                 assert got.get(k) == v, (method, k, v, got.get(k))
-
-
-def test_bucketed_resume_no_exchange(spark, tiny_fx, tiny_dir, tmp_path):
-    """VERDICT r4 #8 — opt-in bucketed stage persistence: a resolve()
-    run with `bucketed_stage_prefix` persists mentions+predictions
-    bucketed on `mention`; a resumed session's label join runs with
-    ZERO Exchange on either side even with broadcast disabled (the
-    at-scale regime where predictions outgrow broadcast range), and
-    the clusters equal the unbucketed run's."""
-    from t_res_spark.plans.pipeline import resume_from_bucketed
-    from t_res_spark.sources.tables import read_fixture
-
-    spark.sql("DROP TABLE IF EXISTS tres_bkt_mentions")
-    spark.sql("DROP TABLE IF EXISTS tres_bkt_predictions")
-    transcripts = read_fixture(spark, tiny_dir, "transcripts")
-    aliases = read_fixture(spark, tiny_dir, "aliases")
-    base = resolve(spark, transcripts, aliases, config=PipelineConfig())
-    want = sorted(
-        map(tuple, base.clusters.select("mention_id", "cluster_id").collect())
-    )
-    res = resolve(
-        spark, transcripts, aliases,
-        config=PipelineConfig(extra={"bucketed_stage_prefix": "tres_bkt"}),
-    )
-    got = sorted(
-        map(tuple, res.clusters.select("mention_id", "cluster_id").collect())
-    )
-    assert got == want
-
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # force the SMJ regime: with bucketed+sorted tables the join
-        # must still need no shuffle and no sort
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        resumed = resume_from_bucketed(spark, "tres_bkt")
-        plan = resumed.linked._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert "SortMergeJoin" in plan, plan
-        rgot = sorted(
-            map(tuple, resumed.clusters.select("mention_id", "cluster_id").collect())
-        )
-        assert rgot == want
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        base.unpersist()
-        res.unpersist()
