@@ -8,9 +8,11 @@ mention table → micro P/R/F1 → CLEF-scorer TSVs, with 9 JSON
 checkpoints for resumability.
 
 Spark restatement (this module): every per-sentence Python loop is a
-DataFrame stage, the JSON checkpoints are the CheckpointCatalog
-(Iceberg-or-parquet), the splits are partition predicates, and the
-external CLEF scorer's input contract is the ordered eval sink.
+DataFrame stage, extraction → ranking → linking is
+``plans.pipeline.resolve``, the splits are partition predicates, and
+the external CLEF scorer's input contract is the ordered eval sink.
+``run_experiment`` keeps no checkpoints: for a resumable run use
+``jobs.resolve_job --checkpoint-dir`` (the CheckpointCatalog).
 
     spark-submit --py-files t_res_spark.zip \\
       t_res_spark/jobs/experiment_job.py \\
@@ -38,18 +40,20 @@ def run_experiment(
 
     Stages (each the Spark analog of the reference step cited):
     1. parse stringified columns (prepare_sents, process_data.py:47-128);
-    2. deterministic NER over sentence text (ner_and_process :258-389);
-    3. gold span alignment (align_gold, process_data.py:130-196 / the
-       max-overlap join of experiment.py:404-416);
-    4. candidate ranking over distinct surfaces (:225-231);
-    5. most-popular linking + decoration (linking_experiments :607-813);
-    6. micro P/R/F1 of prediction vs gold QID (the experiment's
-       resolution metric) — one aggregation row.
+    2. ``resolve()``: deterministic NER (ner_and_process :258-389),
+       candidate ranking over distinct surfaces (:225-231), most-popular
+       linking (linking_experiments :607-813);
+    3. gold span alignment of its mentions (align_gold,
+       process_data.py:130-196 / the max-overlap join of
+       experiment.py:404-416), joined onto its linked mentions;
+    4. micro P/R/F1 of prediction vs gold QID — one aggregation row.
+
+    The returned frames read the run's cached mentions and scratch
+    tables; the scratch dir is removed at interpreter exit
+    (``plans.pipeline``'s ``_LIVE_SCRATCH`` backstop).
     """
     from ..operators.alignment import align_spans
-    from ..operators.extraction import distinct_mentions, extract_mentions
-    from ..operators.linking import link_mentions, most_popular
-    from ..operators.ranking import find_candidates
+    from ..plans.pipeline import PipelineConfig, resolve
     from ..sources.ingest import parse_annotations, parse_sentences
     from ..sources.readers import merge_splits
 
@@ -61,7 +65,10 @@ def run_experiment(
         F.col("sent_pos").cast("int").alias("turn_idx"),
         F.col("sentence_text").alias("text"),
     )
-    mentions = extract_mentions(transcripts)
+    res = resolve(
+        spark, transcripts, aliases,
+        config=PipelineConfig(ranking_method=ranking_method),
+    )
 
     gold = annotations.select(
         F.col("article_id").cast("string").alias("conv_id"),
@@ -72,16 +79,13 @@ def run_experiment(
         F.col("qid").alias("gold_qid"),
     )
     aligned = align_spans(
-        mentions.select("conv_id", "turn_idx", "mention", "start_char", "end_char"),
+        res.mentions.select(
+            "conv_id", "turn_idx", "mention", "start_char", "end_char"
+        ),
         gold,
     )
 
-    candidates = find_candidates(
-        distinct_mentions(mentions), aliases, method=ranking_method
-    )
-    linked = link_mentions(mentions, most_popular(candidates))
-
-    results = linked.join(
+    results = res.linked.join(
         aligned.select("conv_id", "turn_idx", "start_char", "gold_mention", "gold_qid"),
         ["conv_id", "turn_idx", "start_char"],
         "left",

@@ -3,31 +3,34 @@
 ``Pipeline.run_text(text, ...)`` (/root/reference/geoparser/pipeline.py:
 387-490; output contract README.md:75-105) returns one dict per mention
 with the prediction, scores, and gazetteer decoration. This module
-reproduces that surface on top of the distributed stages: the text is
-sentence-split (offset-preserving), run through the same
-extract → rank → link plan as any batch, and collected into the
-reference's dict shape.
+reproduces that surface on top of ``plans.pipeline.resolve``: the text
+is sentence-split (offset-preserving), run through the same stage graph
+as any batch, and its candidates and linked mentions are collected into
+the reference's dict shape.
 
-This is the INTERACTIVE convenience path — it collects one text's
+This is the INTERACTIVE path — it collects one text's candidates and
 mentions to the driver by design (the reference's API is synchronous
-too; its HTTP app calls exactly this). Batch/cluster work goes through
-``plans.pipeline.resolve`` / ``jobs.*`` and never collects.
+too; its HTTP app calls exactly this). Batch/cluster work reads
+``resolve()``'s result frames and never collects.
 """
 
 from __future__ import annotations
 
+import math
 import re
 
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
+
+from ..streaming.incremental import TRANSCRIPT_SCHEMA_DDL
+from .pipeline import PipelineConfig, resolve
 
 # Second alternative captures punctuation-only runs (a text starting
 # with '...' or '?!'), so every character lands in exactly one chunk
 # and concatenation restores the text — the stated invariant — instead
 # of silently dropping leading sentence punctuation. Terminators cover
 # the common non-ASCII sentence punctuation too (CJK full stops,
-# fullwidth !/?, Arabic question mark, ellipsis — r4, widened in
-# lockstep with the unicode extraction classes).
+# fullwidth !/?, Arabic question mark, ellipsis), matching the unicode
+# classes the extraction tagger accepts.
 _TERM = ".!?。！？．؟…"
 _SENTENCE = re.compile(rf"[^{_TERM}]+[{_TERM}]*\s*|[{_TERM}]+\s*")
 _PUNCT_ONLY = re.compile(rf"^[{_TERM}\s]*$")
@@ -66,6 +69,43 @@ def split_sentences(text: str) -> list[tuple[int, str, int]]:
     return [(i, s, off) for i, (s, off) in enumerate(chunks)]
 
 
+def sentence_turns(spark: SparkSession, sentences) -> DataFrame:
+    """``split_sentences`` output → one transcript turn per sentence."""
+    return spark.createDataFrame(
+        [("t0", i, "user", s, None, None) for i, s, _ in sentences],
+        TRANSCRIPT_SCHEMA_DDL,
+    )
+
+
+def candidate_maps(rows) -> tuple[dict, dict, dict]:
+    """Collected candidate rows → per-mention ``string_match_score``
+    {variation: (score, sorted qids)}, ``cross_cand_score`` (best
+    ``abs_relv`` per QID over the sum of all pairs', linking.py:259-262)
+    and ``prior_cand_score`` (best per QID over the sum of the per-QID
+    bests, the reference's REL-path prior, pipeline.py:288-324; ordered
+    score desc, qid). A request has a few dozen rows: plain Python."""
+    qids: dict = {}
+    pairs: dict = {}
+    for r in rows:
+        key = (r["mention"], r["variation"], round(float(r["score"]), 3))
+        qids.setdefault(key, set()).add(r["qid"])
+        pairs.setdefault(r["mention"], []).append((r["qid"], float(r["abs_relv"])))
+    match_map: dict = {}
+    for (mention, variation, score), qs in qids.items():
+        match_map.setdefault(mention, {})[variation] = (score, sorted(qs))
+    cross_map: dict = {}
+    prior_map: dict = {}
+    for mention, scored in pairs.items():
+        best: dict = {}
+        for qid, s in scored:
+            best[qid] = max(s, best.get(qid, s))
+        total_all, total_max = math.fsum(s for _, s in scored), math.fsum(best.values())
+        cross_map[mention] = {q: round(best[q] / total_all, 3) for q in sorted(best)}
+        prior = {q: round(b / total_max, 3) for q, b in best.items()}
+        prior_map[mention] = dict(sorted(prior.items(), key=lambda kv: (-kv[1], kv[0])))
+    return match_map, cross_map, prior_map
+
+
 def run_text(
     spark: SparkSession,
     text: str,
@@ -80,88 +120,37 @@ def run_text(
     prediction, ed_score, string_match_score, prior_cand_score,
     cross_cand_score, latlon, wkdt_class.
 
-    Script-agnostic like the reference's model NER (r5): the cased
-    rule tagger is unioned with the gazetteer-anchored uncased tagger,
-    using the alias KB itself as the gazetteer — a CJK/Arabic/Hebrew
-    toponym present in the KB is tagged and linked exactly like a
-    cased one. On an all-cased KB the uncased branch is empty by
-    construction and the output is unchanged."""
-    from ..operators.gazetteer import extract_mentions_full
-    from ..operators.linking import NIL, link_mentions, most_popular
-    from ..operators.ranking import find_candidates
+    Script-agnostic like the reference's model NER: ``resolve()``'s
+    ``uncased_gazetteer`` extraction unions the cased rule tagger with
+    the gazetteer-anchored uncased tagger over the alias KB, so a
+    CJK/Arabic/Hebrew toponym in the KB is tagged and linked like a
+    cased one. The candidates and linked mentions are collected once
+    each, and the run is released on return. Off a ``local[*]`` master,
+    ``resolve()`` needs ``spark.tres.scratchDir`` or a checkpoint dir."""
+    from ..operators.linking import NIL
 
     sentences = split_sentences(text)
-    transcripts = spark.createDataFrame(
-        [("t0", i, "user", s, None, None) for i, s, _ in sentences],
-        "conv_id string, turn_idx int, role string, text string, "
-        "tool string, ts timestamp",
+    res = resolve(
+        spark,
+        sentence_turns(spark, sentences),
+        aliases,
+        entities=entities,
+        config=PipelineConfig(
+            ranking_method=ranking_method,
+            fuzzy_threshold=threshold,
+            top_k=top_k,
+            extra={"uncased_gazetteer": True},
+        ),
     )
-    mentions = extract_mentions_full(transcripts, aliases, alias_col="alias")
-    surfaces = mentions.select("mention").distinct()
-    candidates = find_candidates(
-        surfaces, aliases, method=ranking_method, threshold=threshold, top_k=top_k
-    )
-    linked = link_mentions(mentions, most_popular(candidates), entities=entities)
-
-    # string_match_score: {variation: (match_score, [qids])} per mention
-    matches = (
-        candidates.groupBy("mention", "variation", "score")
-        .agg(F.sort_array(F.collect_set("qid")).alias("qids"))
-        .collect()
-    )
-    match_map: dict[str, dict] = {}
-    for r in matches:
-        match_map.setdefault(r["mention"], {})[r["variation"]] = (
-            round(float(r["score"]), 3),
-            list(r["qids"]),
-        )
-    # cross_cand_score (normalized candidate map, linking.py:259-262)
-    # and prior_cand_score (normalized p_e_m prior — the reference's
-    # REL path fills it from its get_candidates priors,
-    # pipeline.py:288-324 / rel_utils.py:180-231; its mostpopular path
-    # leaves it empty, pipeline.py:346 — we emit the real map on every
-    # path, same normalization as operators/context.py's priored
-    # aggregation) in ONE aggregation job + collect: the two maps
-    # differ only in denominator (sum of all pair scores vs sum of
-    # per-QID maxima), both computable from the same grouped frame.
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("mention")
-    both = (
-        candidates.withColumn("total_all", F.sum("abs_relv").over(w))
-        .groupBy("mention", "qid")
-        .agg(
-            F.max("abs_relv").alias("best"),
-            F.first("total_all").alias("total_all"),
-        )
-        .withColumn("total_max", F.sum("best").over(w))
-        .select(
-            "mention",
-            "qid",
-            (F.col("best") / F.col("total_all")).alias("norm_score"),
-            (F.col("best") / F.col("total_max")).alias("prior"),
-        )
-        .collect()
-    )
-    cross_map: dict[str, dict] = {}
-    prior_map: dict[str, dict] = {}
-    for r in both:
-        cross_map.setdefault(r["mention"], {})[r["qid"]] = round(
-            float(r["norm_score"]), 3
-        )
-        prior_map.setdefault(r["mention"], {})[r["qid"]] = round(
-            float(r["prior"]), 3
-        )
-    prior_map = {
-        m: dict(sorted(d.items(), key=lambda kv: (-kv[1], kv[0])))
-        for m, d in prior_map.items()
-    }
+    try:
+        match_map, cross_map, prior_map = candidate_maps(res.candidates.collect())
+        linked = res.linked.collect()
+    finally:
+        res.unpersist()
 
     sent_text = {i: s for i, s, _ in sentences}
     out = []
-    for r in sorted(
-        linked.collect(), key=lambda r: (r["turn_idx"], r["start_char"])
-    ):
+    for r in sorted(linked, key=lambda r: (r["turn_idx"], r["start_char"])):
         d = {
             "mention": r["mention"],
             "ner_score": r["ner_score"],

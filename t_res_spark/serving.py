@@ -5,16 +5,19 @@ The reference ships a FastAPI app exposing the pipeline over HTTP
 ``/resolve_sentence``, ``/resolve_full_text``, ``/run_ner``,
 ``/run_candidate_selection``, ``/run_disambiguation``, ``/health``).
 This module reproduces that surface with the standard library only
-(``http.server``) on top of the engine's modular stage functions —
-the same seams the batch pipeline composes (plans.api.run_text,
-operators.extraction / ranking / linking).
+(``http.server``). The resolve endpoints call plans.api.run_text, which
+runs the batch pipeline's own stage graph (plans.pipeline.resolve) on
+the request's sentences; the stage-level endpoints (``/run_ner``,
+``/run_candidate_selection``, ``/run_disambiguation``) call the one
+operator each of them exposes.
 
 Serving model: ONE long-lived SparkSession owned by the server (the
 reference likewise keeps one geoparser instance per app process);
 each request is a driver-side interactive job over a tiny
-createDataFrame input — the documented interactive path
-(plans/api.py), never the batch path. Run batch/cluster work through
-plans.pipeline.resolve instead.
+createDataFrame input, and its result is collected. Because the resolve
+endpoints go through resolve(), the session needs
+``spark.tres.scratchDir`` (shared storage) or a checkpoint dir when the
+master is not ``local[*]``.
 
 Requests accept parameters either as query-string values or as a JSON
 object body (the reference's pydantic-body-on-GET quirk is normalized
@@ -27,8 +30,6 @@ import json
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
-
-from pyspark.sql import functions as F
 
 from .plans import api as plan_api
 
@@ -89,13 +90,10 @@ class TResService:
     def run_ner(self, text: str) -> list[dict]:
         from .operators.extraction import extract_mentions
 
-        sentences = plan_api.split_sentences(text)
-        transcripts = self.spark.createDataFrame(
-            [("t0", i, "user", s, None, None) for i, s, _ in sentences],
-            "conv_id string, turn_idx int, role string, text string, "
-            "tool string, ts timestamp",
+        turns = plan_api.sentence_turns(
+            self.spark, plan_api.split_sentences(text)
         )
-        return _mentions_payload(extract_mentions(transcripts).collect())
+        return _mentions_payload(extract_mentions(turns).collect())
 
     # /run_candidate_selection (app_template.py:97-101)
     def run_candidate_selection(self, toponyms: list[str]) -> dict:
@@ -104,20 +102,16 @@ class TResService:
         queries = self.spark.createDataFrame(
             [(t,) for t in toponyms], "mention string"
         )
-        rows = (
-            find_candidates(
-                queries, self.aliases, method=self.ranking_method,
-                threshold=self.threshold, top_k=self.top_k,
-            )
-            .groupBy("mention", "variation", "score")
-            .agg(F.sort_array(F.collect_set("qid")).alias("qids"))
-            .collect()
-        )
+        rows = find_candidates(
+            queries, self.aliases, method=self.ranking_method,
+            threshold=self.threshold, top_k=self.top_k,
+        ).collect()
+        match_map, _, _ = plan_api.candidate_maps(rows)
         out: dict = {t: {} for t in toponyms}
-        for r in rows:
-            out.setdefault(r["mention"], {})[r["variation"]] = {
-                "score": round(float(r["score"]), 3),
-                "qids": list(r["qids"]),
+        for mention, variations in match_map.items():
+            out[mention] = {
+                v: {"score": score, "qids": qids}
+                for v, (score, qids) in variations.items()
             }
         return out
 

@@ -19,7 +19,7 @@ same entity land in the same cluster across batches without
 re-clustering history (the streaming analog of the memo-cache J12).
 
 Label-space note: the batch engine labels clusters in PREDICTION space
-since r4 (clustering.py — labels are self-stable, no state needed).
+(clustering.py — labels are self-stable, no state needed).
 This streaming surface keeps MENTION-space labels deliberately: it
 demonstrates the pinned-root state-table pattern (crash-safe swap,
 recovery) that prediction-space labels cannot exercise, and consumers
@@ -33,7 +33,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators import extraction, linking, ranking
+from ..plans.pipeline import PipelineConfig, resolve
 
 TRANSCRIPT_SCHEMA_DDL = (
     "conv_id string, turn_idx int, role string, text string, "
@@ -62,7 +62,8 @@ def windowed_turn_counts(stream: DataFrame, window: str = "1 minute") -> DataFra
 
 
 class IncrementalResolver:
-    """foreachBatch handler: extract → rank → link each micro-batch,
+    """foreachBatch handler: ``resolve()`` each micro-batch (the batch
+    pipeline's stage graph and default fuzzy/mostpopular config), then
     assign stable cluster ids via the persisted root-state table."""
 
     def __init__(
@@ -103,15 +104,18 @@ class IncrementalResolver:
         return self.spark.read.parquet(path)
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        mentions = extraction.extract_mentions(batch_df)
-        surfaces = extraction.distinct_mentions(mentions)
-        candidates = ranking.find_candidates(
-            surfaces, self.aliases, method="fuzzy",
-            threshold=self.threshold, top_k=self.top_k,
+        res = resolve(
+            self.spark, batch_df, self.aliases,
+            config=PipelineConfig(fuzzy_threshold=self.threshold, top_k=self.top_k),
         )
-        predictions = linking.most_popular(candidates)
-        linked = linking.link_mentions(mentions, predictions)
+        try:
+            self._fold(res.linked, batch_id)
+        finally:
+            res.unpersist()
 
+    def _fold(self, linked: DataFrame, batch_id: int) -> None:
+        """Pin roots for the batch's new entities, then append its
+        mentions with their cluster ids."""
         roots = self._load_roots().withColumnRenamed("cluster_id", "known_root")
         joined = linked.join(roots, "prediction", "left").cache()
 

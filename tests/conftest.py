@@ -18,6 +18,30 @@ def spark():
     yield s
 
 
+@pytest.fixture()
+def scratch_root(spark, tmp_path):
+    """Point resolve()'s scratch root (``spark.tres.scratchDir``) at an
+    empty per-test dir; the previous setting is restored afterwards."""
+    root = tmp_path / "scratch"
+    root.mkdir()
+    prev = spark.conf.get("spark.tres.scratchDir", None)
+    spark.conf.set("spark.tres.scratchDir", str(root))
+    yield root
+    if prev is None:
+        spark.conf.unset("spark.tres.scratchDir")
+    else:
+        spark.conf.set("spark.tres.scratchDir", prev)
+
+
+@pytest.fixture()
+def persisted_rdds(spark):
+    """Callable → ids of the RDDs persisted right now. Compare id sets,
+    not counts: Spark's ContextCleaner drops earlier tests'
+    garbage-collected RDDs at any moment, so a count can fall mid-test."""
+    jsc = spark.sparkContext._jsc
+    return lambda: set(jsc.getPersistentRDDs().keySet().toArray())
+
+
 @pytest.fixture(scope="session")
 def tiny_fx():
     return datagen.generate(seed=42, **datagen.SCALES["tiny"])

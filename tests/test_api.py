@@ -9,7 +9,8 @@ def test_split_sentences_preserves_text():
     assert "".join(s for _, s, _ in parts) == text
     for i, s, off in parts:
         assert text[off : off + len(s)] == s
-    # leading punctuation runs must not be dropped (ADVICE r02)
+    # leading punctuation runs must not be dropped: concatenation
+    # restores the text
     for tricky in ("...Ellipsis first. Then London.", "?! What. ", "..."):
         parts = split_sentences(tricky)
         assert "".join(s for _, s, _ in parts) == tricky
@@ -23,7 +24,7 @@ def test_split_sentences_preserves_text():
     assert "".join(s for _, s, _ in parts) == mid
 
 
-def test_run_text_reference_shape(spark):
+def test_run_text_reference_shape(spark, scratch_root, persisted_rdds):
     from t_res_spark.plans.api import run_text
 
     aliases = spark.createDataFrame(
@@ -42,12 +43,16 @@ def test_run_text_reference_shape(spark):
         ],
         "qid string, lat double, lon double, wkdt_class string",
     )
+    cached = persisted_rdds()
     out = run_text(
         spark,
         "She was on a visit at Chippenham. Then to Bath today.",
         aliases,
         entities=entities,
     )
+    # run_text releases its resolve() run: no scratch dir, no cache left
+    assert not list(scratch_root.glob("tres_run_*"))
+    assert persisted_rdds() <= cached
     assert [d["mention"] for d in out] == ["Chippenham", "Bath"]
     chip = out[0]
     assert chip["pos"] == 22 and chip["sent_idx"] == 0
@@ -61,8 +66,8 @@ def test_run_text_reference_shape(spark):
     assert chip["latlon"] == [51.4585, -2.1158]
     assert chip["wkdt_class"] == "Q3957"
     # prior_cand_score: non-empty normalized p_e_m prior map per
-    # mention, sorted score-desc, summing to 1 (VERDICT r02 #6;
-    # reference REL-path contract, pipeline.py:288-324)
+    # mention, sorted score-desc, summing to 1 (the reference's
+    # REL-path contract, pipeline.py:288-324)
     pri = chip["prior_cand_score"]
     assert set(pri) == {"Q775299", "Q3138621"}
     assert pri["Q775299"] == 0.875 and pri["Q3138621"] == 0.125
@@ -74,7 +79,7 @@ def test_run_text_reference_shape(spark):
 
 
 def test_run_text_uncased_script(spark):
-    """r5 — run_text is script-agnostic: a CJK toponym in the alias KB
+    """run_text is script-agnostic: a CJK toponym in the alias KB
     is tagged (gazetteer-anchored) and linked like a cased one, in the
     same reference dict shape; the cased path is untouched."""
     from t_res_spark.plans.api import run_text
@@ -99,7 +104,7 @@ def test_run_text_uncased_script(spark):
 
 
 def test_resolve_uncased_gazetteer_flag(spark):
-    """r5 — the batch pipeline resolves uncased-script mentions when
+    """The batch pipeline resolves uncased-script mentions when
     the uncased_gazetteer flag is set; off by default."""
     from t_res_spark.plans.pipeline import PipelineConfig, resolve
 

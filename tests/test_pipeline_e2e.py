@@ -59,34 +59,26 @@ def test_resume_from_checkpoint(spark, tiny_dir, tmp_path, root_kind):
     assert c1 == c2
 
 
-def test_scratch_dir_lifecycle(spark, tiny_dir, tmp_path):
+def test_scratch_dir_lifecycle(spark, tiny_dir, scratch_root):
     """Without a catalog a run writes its parquet stages under ONE
     scratch dir on the configured scratch root; unpersist() deletes it,
     and a stage that raises deletes it before the error propagates."""
     transcripts = read_fixture(spark, tiny_dir, "transcripts")
     aliases = read_fixture(spark, tiny_dir, "aliases")
-    prev = spark.conf.get("spark.tres.scratchDir", None)
-    spark.conf.set("spark.tres.scratchDir", str(tmp_path))
-    try:
-        res = resolve(spark, transcripts, aliases)
-        runs = os.listdir(tmp_path)
-        assert len(runs) == 1 and runs[0].startswith("tres_run_"), runs
-        assert sorted(os.listdir(tmp_path / runs[0])) == ["predictions", "surfaces"]
-        assert res.clusters.count() > 0
-        res.unpersist()
-        assert os.listdir(tmp_path) == []
+    res = resolve(spark, transcripts, aliases)
+    runs = os.listdir(scratch_root)
+    assert len(runs) == 1 and runs[0].startswith("tres_run_"), runs
+    assert sorted(os.listdir(scratch_root / runs[0])) == ["predictions", "surfaces"]
+    assert res.clusters.count() > 0
+    res.unpersist()
+    assert os.listdir(scratch_root) == []
 
-        with pytest.raises(ValueError, match="unknown linking method"):
-            resolve(
-                spark, transcripts, aliases,
-                config=PipelineConfig(linking_method="bogus"),
-            )
-        assert os.listdir(tmp_path) == []
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.tres.scratchDir")
-        else:
-            spark.conf.set("spark.tres.scratchDir", prev)
+    with pytest.raises(ValueError, match="unknown linking method"):
+        resolve(
+            spark, transcripts, aliases,
+            config=PipelineConfig(linking_method="bogus"),
+        )
+    assert os.listdir(scratch_root) == []
 
 
 def _cfg_hash():
@@ -139,3 +131,48 @@ def test_config_dispatch_all_ranking_methods(spark, tiny_dir):
             # must agree on (exact match short-circuits identically)
             for k, v in base.items():
                 assert got.get(k) == v, (method, k, v, got.get(k))
+
+
+# Stage functions and the modules allowed to call them: the defining
+# module, resolve() itself, the gazetteer extractor (which wraps the
+# cased one) and the serving endpoints that expose a single stage.
+_STAGE_DEFS = {
+    "find_candidates": "operators/ranking.py",
+    "extract_mentions": "operators/extraction.py",
+    "extract_mentions_full": "operators/gazetteer.py",
+    "most_popular": "operators/linking.py",
+    "link_mentions": "operators/linking.py",
+}
+_STAGE_WIRING = {"plans/pipeline.py", "operators/gazetteer.py"}
+_STAGE_ENDPOINTS = {"run_ner", "run_candidate_selection", "run_disambiguation"}
+
+
+def test_resolve_is_the_only_stage_wiring():
+    """No caller re-wires extract → rank → link: outside the allowed
+    places every caller goes through ``plans.pipeline.resolve``."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "t_res_spark"
+    offenders = []
+
+    def visit(node, rel, funcs):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            funcs = funcs + (node.name,)
+        if isinstance(node, ast.Call):
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+            allowed = (
+                rel == _STAGE_DEFS.get(name)
+                or rel in _STAGE_WIRING
+                or (rel == "serving.py" and _STAGE_ENDPOINTS & set(funcs))
+            )
+            if name in _STAGE_DEFS and not allowed:
+                offenders.append(f"{rel}:{node.lineno} {name}")
+        for child in ast.iter_child_nodes(node):
+            visit(child, rel, funcs)
+
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        visit(ast.parse(path.read_text(encoding="utf-8")), rel, ())
+    assert not offenders, offenders

@@ -34,7 +34,9 @@ def _write_batch(spark, path, rows):
     df.coalesce(1).write.mode("append").parquet(path)
 
 
-def test_incremental_two_batches(spark, alias_kb, tmp_path):
+def test_incremental_two_batches(
+    spark, alias_kb, tmp_path, scratch_root, persisted_rdds
+):
     in_dir = str(tmp_path / "in")
     state = str(tmp_path / "state")
     from datetime import datetime
@@ -42,6 +44,7 @@ def test_incremental_two_batches(spark, alias_kb, tmp_path):
     t = datetime(2024, 1, 1)
     _write_batch(spark, in_dir, [("c1", 0, "user", "we saw Tarvik today", None, t)])
 
+    cached = persisted_rdds()
     stream = stream_transcripts(spark, in_dir)
     resolver = IncrementalResolver(spark, alias_kb, state)
     q = resolver.start(stream)
@@ -54,6 +57,9 @@ def test_incremental_two_batches(spark, alias_kb, tmp_path):
     )
     q2 = resolver.start(stream_transcripts(spark, in_dir))
     assert q2.awaitTermination(120), 'stream did not drain in 120s'
+    # each micro-batch releases its resolve() run: no scratch dir, no cache
+    assert not list(scratch_root.glob("tres_run_*"))
+    assert persisted_rdds() <= cached
 
     out = spark.read.parquet(os.path.join(state, "clusters"))
     rows = {r["mention_id"]: r for r in out.collect()}
@@ -87,23 +93,22 @@ def test_windowed_counts_runs(spark, tmp_path):
 
 
 def test_streaming_equals_batch_partition(spark, alias_kb, tmp_path):
-    """VERDICT r4 #7 — cross-path equivalence: IncrementalResolver over
-    3 micro-batch splits induces EXACTLY the same partition of mentions
-    into clusters as the batch path (extract → rank → link →
-    cluster_mentions) over the whole corpus. Labels differ by design
-    (streaming pins mention-space roots for the state-table pattern;
-    batch labels in prediction space), so the invariant is the induced
-    partition, not the label strings."""
+    """Cross-path equivalence: IncrementalResolver over 3 micro-batch
+    splits induces EXACTLY the same partition of mentions into clusters
+    as ``resolve()`` over the whole corpus, NIL singletons included.
+    Labels differ by design (streaming pins mention-space roots for the
+    state-table pattern; batch labels in prediction space), so the
+    invariant is the induced partition, not the label strings."""
     import random
     from datetime import datetime
 
-    from t_res_spark.operators import extraction, linking, ranking
-    from t_res_spark.operators.clustering import cluster_mentions
+    from t_res_spark.plans.pipeline import resolve
 
     rng = random.Random(7)
     # exact surfaces, known OCR variants, an unseen-but-close variant
-    # (fuzzy path), and junk (NIL singletons)
-    surfaces = ["Tarvik", "Tarvvik", "Belford", "Belfordd", "zzjunk", "qq"]
+    # (fuzzy path), and capitalised non-alias words (NIL singletons:
+    # the cased tagger extracts them, no alias is within the threshold)
+    surfaces = ["Tarvik", "Tarvvik", "Belford", "Belfordd", "Quorvex", "Zimbu"]
     t0 = datetime(2024, 1, 1)
     corpus = [
         (f"c{i // 4}", i % 4, "user", f"we saw {rng.choice(surfaces)} today",
@@ -116,16 +121,12 @@ def test_streaming_equals_batch_partition(spark, alias_kb, tmp_path):
         corpus, "conv_id string, turn_idx int, role string, text string, "
                 "tool string, ts timestamp"
     )
-    mentions = extraction.extract_mentions(full)
-    cands = ranking.find_candidates(
-        extraction.distinct_mentions(mentions), alias_kb,
-        method="fuzzy", threshold=0.7, top_k=3,
-    )
-    linked = linking.link_mentions(mentions, linking.most_popular(cands))
+    res = resolve(spark, full, alias_kb)
     batch_pairs = [
         (r["mention_id"], r["cluster_id"])
-        for r in cluster_mentions(linked).select("mention_id", "cluster_id").collect()
+        for r in res.clusters.select("mention_id", "cluster_id").collect()
     ]
+    res.unpersist()
 
     # --- streaming path: same corpus in 3 splits ---------------------
     in_dir = str(tmp_path / "eq_in")
@@ -136,11 +137,8 @@ def test_streaming_equals_batch_partition(spark, alias_kb, tmp_path):
         q = resolver.start(stream_transcripts(spark, in_dir))
         assert q.awaitTermination(120), 'stream did not drain in 120s'
 
-    out = spark.read.parquet(os.path.join(state, "clusters"))
-    stream_pairs = [
-        (r["mention_id"], r["cluster_id"])
-        for r in out.select("mention_id", "cluster_id").collect()
-    ]
+    out = spark.read.parquet(os.path.join(state, "clusters")).collect()
+    stream_pairs = [(r["mention_id"], r["cluster_id"]) for r in out]
 
     def partition(pairs):
         clusters = {}
@@ -151,3 +149,4 @@ def test_streaming_equals_batch_partition(spark, alias_kb, tmp_path):
     assert dict(stream_pairs), "streaming produced no mentions"
     assert len(dict(stream_pairs)) == len(stream_pairs), "duplicate mention rows"
     assert partition(stream_pairs) == partition(batch_pairs)
+    assert any(r["prediction"] == "NIL" for r in out), "no NIL mention streamed"
