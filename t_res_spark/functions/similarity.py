@@ -28,7 +28,6 @@ correctness gate.
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -267,17 +266,6 @@ def jaro_winkler_batch(a: pd.Series, b: pd.Series) -> pd.Series:
         index=a.index,
         dtype="float64",
     )
-
-
-def cosine_sim_matrix(q: np.ndarray, c: np.ndarray) -> np.ndarray:
-    """Block-local cosine similarity: (nq, d) x (nc, d) -> (nq, nc).
-
-    The matrix form of the reference's DeezyMatch faiss/cosine ranking
-    (/root/reference/geoparser/ranking.py:534-562) — one BLAS call per
-    block instead of an ANN index."""
-    qn = q / np.maximum(np.linalg.norm(q, axis=1, keepdims=True), 1e-12)
-    cn = c / np.maximum(np.linalg.norm(c, axis=1, keepdims=True), 1e-12)
-    return qn @ cn.T
 
 
 # ---------------------------------------------------------------------------

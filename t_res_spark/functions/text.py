@@ -15,16 +15,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def fix_ndash(text: Column) -> Column:
-    """``—`` → ``,`` except at char 0 (recogniser.py:374-379)."""
-    return F.when(F.length(text) <= 1, text).otherwise(
-        F.concat(
-            F.substring(text, 1, 1),
-            F.regexp_replace(F.substring(text, 2, 0x7FFFFFF), "—", ","),
-        )
-    )
-
-
 def alias_noise_filter(alias: Column) -> Column:
     """Predicate: alias is clean (ranking.py:221-227). Catalyst pushes
     this to the alias-table scan."""
@@ -53,12 +43,6 @@ def phonetic_key(s: Column) -> Column:
     skeleton = F.regexp_replace(lowered, "[aeiouy0-9]", "")
     collapsed = F.regexp_replace(skeleton, "(.)\\1+", "$1")
     return F.concat(F.substring(lowered, 1, 1), collapsed)
-
-
-def mention_sanity_filter(mention: Column) -> Column:
-    """Keep mentions of length > 1 that are not all-lowercase
-    (/root/reference/geoparser/pipeline.py:618)."""
-    return (F.length(mention) > 1) & (mention != F.lower(mention))
 
 
 def normalize_wiki_url(url: Column) -> Column:
@@ -103,8 +87,8 @@ def zfill_code(code: Column, width: int = 7) -> Column:
     codes; ``str.zfill`` never truncates, so over-width codes pass
     through unchanged. Sign handling matches zfill for BOTH signs:
     zeros fill AFTER the sign character ('-12' → '-000012',
-    '+12' → '+000012' — ADVICE r03; str(int) never emits '+', but
-    string-typed inputs may)."""
+    '+12' → '+000012'; str(int) never emits '+', but string-typed
+    inputs may)."""
     s = code.cast("string")
     sign = F.substring(s, 1, 1)
     padded = F.when(

@@ -31,26 +31,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def edges_from_predictions(linked: DataFrame) -> DataFrame:
-    """Star edges from shared predictions: every mention instance is
-    connected to the min mention_id of its predicted entity (NIL
-    mentions get no edges → singleton clusters, linking.py:239
-    convention). O(n) edges, map-side-combinable min — this is the
-    scalable alternative to materialising all same-entity pairs."""
-    non_nil = linked.filter(F.col("prediction") != "NIL")
-    # groupBy + join, NOT a window over prediction: a window puts every
-    # mention of a hot entity into one task (straggler); the groupBy min
-    # is map-side combinable and the tiny roots table joins back
-    # broadcast (AQE picks it).
-    roots = non_nil.groupBy("prediction").agg(F.min("mention_id").alias("root"))
-    return (
-        non_nil.select("mention_id", "prediction")
-        .join(roots, "prediction")
-        .filter(F.col("mention_id") != F.col("root"))
-        .select(F.col("mention_id").alias("src"), F.col("root").alias("dst"))
-    )
-
-
 def _canonical(edges: DataFrame) -> DataFrame:
     return (
         edges.filter(F.col("src") != F.col("dst"))
@@ -226,7 +206,7 @@ def cluster_mentions(
     # Cross-entity merge evidence: close over the prediction graph.
     # Edge endpoints are restricted to predictions actually present
     # (an absent middle node must not transitively bridge two present
-    # ones — same semantics as the pre-r4 representative-join impl).
+    # ones).
     present = (
         linked.filter(F.col("prediction") != "NIL")
         .select("prediction")

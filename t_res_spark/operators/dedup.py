@@ -24,7 +24,7 @@ shingle hashes (xxhash64) — all native column math over arrays
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .clustering import connected_components
@@ -85,22 +85,6 @@ def _rebalance(docs: DataFrame, key: str = "doc_id") -> DataFrame:
     from ..functions.shuffle import shuffle_width
 
     return docs.repartition(shuffle_width(docs), key)
-
-
-def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Exact dedup: group by digest of normalized text; emit
-    (doc_id, dup_group, is_canonical). Canonical = min doc_id —
-    deterministic keep rule (the reference's analog is the
-    lowercase-dedup keep-most-common-casing rule,
-    /root/reference/utils/deezy_processing.py:346-368 / W8)."""
-    digest = F.xxhash64(F.lower(F.trim(F.col(text_col))))
-    w = Window.partitionBy("dup_key")
-    return (
-        docs.withColumn("dup_key", digest)
-        .withColumn("dup_group", F.min("doc_id").over(w))
-        .withColumn("is_canonical", F.col("doc_id") == F.col("dup_group"))
-        .drop("dup_key")
-    )
 
 
 def minhash_signatures(
@@ -253,11 +237,11 @@ def minhash_lsh_pairs(
     at the cost of cap-bounded O(k²·num_hashes) comparisons per
     bucket done where the data already lives.
 
-    Skew guard (ADVICE r03): bucket membership is pre-counted on an
-    ids-only pass and the heavy (doc_id, sig) structs are semi-joined
-    to under-cap buckets BEFORE the collect aggregation — an over-cap
-    bucket (a large exact-dup family) never materializes a signature
-    array in any agg buffer (~512 B/doc × family size otherwise)."""
+    Skew guard: bucket membership is pre-counted on an ids-only pass
+    and the heavy (doc_id, sig) structs are semi-joined to under-cap
+    buckets BEFORE the collect aggregation — an over-cap bucket (a
+    large exact-dup family) never materializes a signature array in
+    any agg buffer (~512 B/doc × family size otherwise)."""
     if estimate_threshold is None:
         banded = signatures.select(
             "doc_id",
@@ -365,7 +349,7 @@ def near_duplicate_clusters(
     comparisons than strings; labels are cast back at the surface."""
     # Fused plan: signatures are computed once and consumed by the
     # banding shuffle (structs) plus the ids-only bucket pre-count —
-    # TWO subplans sharing the signature subtree. Measured r6: AQE's
+    # TWO subplans sharing the signature subtree. Measured: AQE's
     # exchange reuse does NOT kick in for the duplicated aggregation
     # subtree at runtime (sig+pairs timed ≈ 2x sig alone), so the
     # signature stage ran twice per query. A LAZY ``cache()`` (no extra
@@ -417,7 +401,7 @@ def embedding_near_duplicates(
 
     ``dim``: embedding dimensionality. Callers that know it (fixed
     encoder width, table contract) should pass it — when None a
-    one-row probe job runs as a fallback (VERDICT r03 #9)."""
+    one-row probe job (one extra Spark job) reads it."""
     from .similarity_search import _dot, _hyperplanes, _norm, srp_buckets_arrow
 
     if dim is None:
@@ -425,11 +409,11 @@ def embedding_near_duplicates(
         dim = dim_row["d"] if dim_row else 0
     vectors = _rebalance(vectors, id_col)
     planes = [_hyperplanes(dim, bits, seed + t) for t in range(tables)]
-    # r6 reshape (guide §8: decide with small rows, move big rows once):
-    # the bucket self-join and the pair dedup used to CARRY both 64-dim
-    # vectors — every candidate pair shuffled ~1 KB of payload through
-    # the join and again through the distinct, O(bucket²) pairs deep.
-    # Buckets are decided by ids alone, the distinct runs on bare
+    # Decide with small rows, move big rows once: if the bucket
+    # self-join and the pair dedup CARRIED both 64-dim vectors, every
+    # candidate pair would shuffle ~1 KB of payload through the join and
+    # again through the distinct, O(bucket²) pairs deep. So buckets are
+    # decided by ids alone, the distinct runs on bare
     # (id, id_b), and the two vectors are re-attached ONCE to the
     # surviving pair set (the jaccard_verify pattern). (id → vec) is
     # functional, so distinct-on-ids is the identical pair set and the

@@ -1,4 +1,4 @@
-"""Gazetteer-anchored tagging for uncased scripts (VERDICT r4 #3).
+"""Gazetteer-anchored tagging for uncased scripts.
 
 The rule-based tagger in ``extraction.py`` needs a capitalization
 signal, so scripts with no letter case — CJK, Arabic, Hebrew, Thai,
@@ -144,11 +144,11 @@ def gazetteer_tag_uncased(
     # longer match on the same turn (anti-join on the small match set).
     # Every `containers` column is RENAMED (c_conv/c_turn, not just the
     # span columns) so the self-join condition never references the
-    # same attribute on both sides — the previous hits["conv_id"] ==
-    # containers["conv_id"] form leaned on Spark's dataset-id
-    # disambiguation and emitted "Constructing trivially true equals
-    # predicate" warnings; if that resolution ever degraded, the
-    # containment suppression would silently go cross-turn (ADVICE r5).
+    # same attribute on both sides. A hits["conv_id"] ==
+    # containers["conv_id"] form would lean on Spark's dataset-id
+    # disambiguation (it warns "Constructing trivially true equals
+    # predicate"); if that resolution ever degraded, the containment
+    # suppression would silently go cross-turn.
     containers = hits.select(
         F.col("conv_id").alias("c_conv"),
         F.col("turn_idx").alias("c_turn"),
@@ -183,8 +183,7 @@ def gazetteer_tag_uncased(
 
 
 def extract_mentions_full(
-    transcripts: DataFrame, gazetteer: DataFrame | None = None,
-    alias_col: str = "alias",
+    transcripts: DataFrame, gazetteer: DataFrame, alias_col: str = "alias",
 ) -> DataFrame:
     """Cased rule-based extraction ∪ uncased gazetteer-anchored
     extraction — the complete analog of the reference's script-agnostic
@@ -192,9 +191,6 @@ def extract_mentions_full(
     so the union never double-tags a span."""
     from .extraction import extract_mentions
 
-    cased = extract_mentions(transcripts)
-    if gazetteer is None:
-        return cased
-    return cased.unionByName(
+    return extract_mentions(transcripts).unionByName(
         gazetteer_tag_uncased(transcripts, gazetteer, alias_col=alias_col)
     )

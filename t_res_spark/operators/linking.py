@@ -57,23 +57,6 @@ def most_popular(candidates: DataFrame) -> DataFrame:
     )
 
 
-def candidate_score_map(candidates: DataFrame) -> DataFrame:
-    """The reference's normalized all-candidates map
-    (linking.py:259-262), exploded to rows:
-    (mention, qid, norm_score). Dup qids across variations resolve to
-    their max pair score (deterministic analog of the reference's
-    last-write dict semantics)."""
-    w = Window.partitionBy("mention")
-    return (
-        candidates.withColumn("total", F.sum("abs_relv").over(w))
-        .groupBy("mention", "qid", "total")
-        .agg(F.max("abs_relv").alias("best"))
-        .select(
-            "mention", "qid", (F.col("best") / F.col("total")).alias("norm_score")
-        )
-    )
-
-
 def by_distance(
     candidates: DataFrame,
     entities: DataFrame,

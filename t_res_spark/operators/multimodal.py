@@ -2,10 +2,10 @@
 ``binary`` columns with typed metadata structs.
 
 The Spark-side plumbing — schemas, partition-friendly batch iteration,
-Arrow UDF signatures, frame-sampling fan-out — is real and tested; the
-actual codec work is STUBBED deterministically (image/audio libraries
-are not available in this container, and on a real cluster they would be
-shipped via --archives). Each stub is clearly marked and isolated so a
+Arrow UDF signatures — is real and tested; the actual codec work is
+STUBBED deterministically (image/audio libraries are not dependencies
+of this package; on a real cluster they would be shipped via
+--archives). Each stub is clearly marked and isolated so a
 real decoder drops in without touching the plan."""
 
 from __future__ import annotations
@@ -15,7 +15,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MEDIA_SCHEMA = T.StructType(
@@ -86,21 +85,4 @@ def extract_media_features(media: DataFrame, dim: int = 16) -> DataFrame:
 
     return media.select("media_id", "kind", "payload").mapInPandas(
         _batches, schema=FEATURE_SCHEMA
-    )
-
-
-def sample_video_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Frame-sampling fan-out: one row per sampled frame timestamp —
-    the *plan* part of frame extraction (explode on a native sequence);
-    the per-frame decode would run in extract_media_features."""
-    video = media.filter(F.col("kind") == "video")
-    return video.select(
-        "media_id",
-        F.explode(
-            F.sequence(
-                F.lit(0),
-                F.greatest(F.coalesce(F.col("meta.duration_ms"), F.lit(0)) - 1, F.lit(0)),
-                F.lit(every_ms),
-            )
-        ).alias("frame_ts_ms"),
     )

@@ -21,8 +21,10 @@ All methods share:
 - alias noise filtering pushed to the scan (ranking.py:216-247);
 - variation→QID resolution join (ranking.py:679-705) producing the
   exploded candidate rows (mention, variation, score, qid, relv, abs_relv);
-- a persisted candidate-cache anti-join hook (ranking.py:315-316) — see
-  ``plans.pipeline`` (J12; doubles as the resumability checkpoint).
+- the reference's candidate memo-cache (ranking.py:315-316) is the
+  ``candidates`` stage of ``plans.pipeline.resolve``: under a
+  ``CheckpointCatalog`` it is checkpointed, so a rerun resumes instead
+  of re-ranking.
 
 Output contract: candidates(mention, variation, score, qid, relv, abs_relv).
 """

@@ -270,6 +270,7 @@ def resolve(
             return linking.by_distance(candidates, entities, origins)
         raise ValueError(f"unknown linking method: {cfg.linking_method}")
 
+    mentions = None
     try:
         mentions = _stage("mentions", _extract, cut="persist")
         surfaces = _stage(
@@ -298,7 +299,10 @@ def resolve(
         clusters = _stage("clusters", lambda: clustering.cluster_mentions(linked))
         metrics = _stage("metrics", lambda: stage_metrics(spark, clusters))
     except BaseException:
-        # a stage raised: remove the run's scratch now, not at exit
+        # a stage raised: release the mentions cache and remove the
+        # run's scratch now, not at exit
+        if mentions is not None:
+            mentions.unpersist()
         _drop_scratch(scratch)
         raise
 

@@ -110,8 +110,7 @@ class CheckpointCatalog:
         h = config_hash(config)
         if not self.overwrite and self.exists(name, h):
             return self.read(name, h)
-        df = df_thunk() if callable(df_thunk) else df_thunk
-        return self.write(df, name, h)
+        return self.write(df_thunk(), name, h)
 
 
 def read_fixture(spark: SparkSession, fixture_dir: str, name: str) -> DataFrame:
@@ -135,57 +134,3 @@ def write_eval_sink(linked: DataFrame, path: str) -> None:
         .write.mode("overwrite")
         .text(path)
     )
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_cols: list[str],
-    num_buckets: int = 32,
-    sort_cols: list[str] | None = None,
-) -> None:
-    """Bucketed managed-table write — the offline co-location step for
-    repeatedly-joined big tables (the alias KB, candidate caches,
-    entity metadata).
-
-    Two tables bucketed on the same key with the same bucket count
-    join with NO shuffle exchange on either side (verified by plan
-    test): at 100 TB the alias KB is written bucketed once and every
-    pipeline run joins against it shuffle-free — the persisted
-    equivalent of the per-run `repartition` co-location the blocking
-    stage does. ``sortBy`` additionally pre-sorts within buckets so a
-    sort-merge join skips its sort."""
-    spark = df.sparkSession
-    if not spark.catalog.tableExists(table_name):
-        # an in-memory catalog forgets managed tables across sessions
-        # but their warehouse locations survive; saveAsTable refuses to
-        # create over an orphaned location, so clear it first. Scoped
-        # tightly (ADVICE r5): derive the location from the identifier
-        # parts (db-qualified names map to <db>.db/<tbl>, not to a
-        # top-level directory that could shadow an unrelated path), and
-        # only delete a directory that actually looks like orphaned
-        # saveAsTable output — a _SUCCESS marker or parquet part files
-        # at its root — never an arbitrary same-named directory.
-        try:
-            warehouse = str(spark.conf.get("spark.sql.warehouse.dir")).rstrip("/")
-            parts = [p.strip("`").lower() for p in table_name.split(".")]
-            if len(parts) == 1:
-                rel = parts[0]
-            else:
-                rel = f"{parts[-2]}.db/{parts[-1]}"
-            fs, hpath = hadoop_fs(spark, f"{warehouse}/{rel}")
-            if fs.exists(hpath):
-                looks_like_table = False
-                for st in fs.listStatus(hpath):
-                    name = st.getPath().getName()
-                    if name == "_SUCCESS" or name.endswith(".parquet"):
-                        looks_like_table = True
-                        break
-                if looks_like_table:
-                    fs.delete(hpath, True)
-        except Exception:
-            pass
-    w = df.write.mode("overwrite").bucketBy(num_buckets, *bucket_cols)
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.format("parquet").saveAsTable(table_name)

@@ -5,10 +5,9 @@ incremental behavior is a JSON memo-cache
 (/root/reference/geoparser/ranking.py:315-316) and per-request HTTP
 processing (/root/reference/app/app_template.py:64-72). This module is
 the engine's forward-looking extension: Structured Streaming ingest
-(``readStream`` on the transcripts table/directory), watermarked
-windowed aggregation for monitoring, and ``foreachBatch`` incremental
-resolution that folds each micro-batch into a persisted cluster-state
-table.
+(``readStream`` on the transcripts table/directory) and
+``foreachBatch`` incremental resolution that folds each micro-batch
+into a persisted cluster-state table.
 
 Incremental model: predictions are a pure function of the mention
 surface (candidate ranking + most-popular linking are context-free), so
@@ -48,16 +47,6 @@ def stream_transcripts(spark: SparkSession, path: str) -> DataFrame:
         spark.readStream.schema(TRANSCRIPT_SCHEMA_DDL)
         .option("maxFilesPerTrigger", 8)
         .parquet(path)
-    )
-
-
-def windowed_turn_counts(stream: DataFrame, window: str = "1 minute") -> DataFrame:
-    """Watermarked tumbling-window turn counts per role — the
-    monitoring aggregation (late data beyond 2 windows dropped)."""
-    return (
-        stream.withWatermark("ts", "2 minutes")
-        .groupBy(F.window("ts", window), F.col("role"))
-        .agg(F.count(F.lit(1)).alias("turns"))
     )
 
 

@@ -1,5 +1,5 @@
-"""Dedup operators: exact groups, MinHash/LSH recall on planted
-near-dups, SimHash Hamming, Jaccard verify."""
+"""Dedup operators: MinHash/LSH recall on planted near-dups, SimHash
+Hamming, Jaccard verify."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -24,13 +24,6 @@ def docs(spark):
             "broadcast joins and adaptive query execution plans"),
     ]
     return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_exact_duplicates(docs):
-    out = {r["doc_id"]: r for r in dedup.exact_duplicates(docs).collect()}
-    assert out[1]["dup_group"] == 0 and not out[1]["is_canonical"]
-    assert out[0]["is_canonical"]
-    assert out[2]["dup_group"] == 2  # near dup is NOT an exact dup
 
 
 def test_minhash_near_dup_clusters(docs):

@@ -4,7 +4,6 @@
 are external data; the math is asserted exactly instead)."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from t_res_spark.operators import linking
 
@@ -68,18 +67,6 @@ def test_by_distance_flip(spark, cands):
            linking.by_distance(cands, entities, origins_toronto).collect()}
     assert near["London"] == "Q84"
     assert far["London"] == "Q92561"  # flip, linking.py golden :74-83
-
-
-def test_candidate_score_map(cands):
-    """linking.py:259-262 analog: norm = max pair score per (mention,
-    qid) over the sum of ALL pair scores (a qid reachable via two
-    variations counts twice in the denominator, exactly like the
-    reference's total_score accumulation)."""
-    got = {(r["mention"], r["qid"]): r["norm_score"]
-           for r in linking.candidate_score_map(cands).collect()}
-    total = 43000000.0 + 453000.0
-    assert abs(got[("London", "Q84")] - 43000000.0 / total) < 1e-12
-    assert abs(got[("London", "Q92561")] - 453000.0 / total) < 1e-12
 
 
 def test_linking_no_forced_broadcast(spark, cands):

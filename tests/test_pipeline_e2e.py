@@ -59,10 +59,11 @@ def test_resume_from_checkpoint(spark, tiny_dir, tmp_path, root_kind):
     assert c1 == c2
 
 
-def test_scratch_dir_lifecycle(spark, tiny_dir, scratch_root):
+def test_scratch_dir_lifecycle(spark, tiny_dir, scratch_root, persisted_rdds):
     """Without a catalog a run writes its parquet stages under ONE
     scratch dir on the configured scratch root; unpersist() deletes it,
-    and a stage that raises deletes it before the error propagates."""
+    and a stage that raises deletes it and releases the mentions cache
+    before the error propagates."""
     transcripts = read_fixture(spark, tiny_dir, "transcripts")
     aliases = read_fixture(spark, tiny_dir, "aliases")
     res = resolve(spark, transcripts, aliases)
@@ -73,12 +74,14 @@ def test_scratch_dir_lifecycle(spark, tiny_dir, scratch_root):
     res.unpersist()
     assert os.listdir(scratch_root) == []
 
+    before = persisted_rdds()
     with pytest.raises(ValueError, match="unknown linking method"):
         resolve(
             spark, transcripts, aliases,
             config=PipelineConfig(linking_method="bogus"),
         )
     assert os.listdir(scratch_root) == []
+    assert persisted_rdds() <= before
 
 
 def _cfg_hash():

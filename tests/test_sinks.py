@@ -60,34 +60,3 @@ def test_checkpoint_overwrite_flag(spark, tmp_path):
     cat_ow = CheckpointCatalog(spark, str(tmp_path), overwrite=True)
     out3 = cat_ow.materialize(lambda: df2, "t", cfg)
     assert [r["v"] for r in out3.collect()] == [2]
-
-
-def test_bucketed_join_has_no_shuffle(spark):
-    """Co-located bucketed join: both sides bucketed on the join key →
-    the physical plan contains NO Exchange of any kind (the 100 TB
-    repeated-join path for the alias KB)."""
-    from t_res_spark.sources.tables import write_bucketed
-
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try:
-        # force a non-broadcast join so the assertion is meaningful
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        mentions = spark.range(0, 1000).selectExpr(
-            "concat('m', id % 97) AS mention", "id AS mention_id"
-        )
-        aliases = spark.range(0, 500).selectExpr(
-            "concat('m', id % 97) AS mention", "concat('Q', id) AS qid"
-        )
-        write_bucketed(mentions, "b_mentions", ["mention"], 8, ["mention"])
-        write_bucketed(aliases, "b_aliases", ["mention"], 8, ["mention"])
-        joined = spark.table("b_mentions").join(spark.table("b_aliases"), "mention")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert joined.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-        spark.sql("DROP TABLE IF EXISTS b_mentions")
-        spark.sql("DROP TABLE IF EXISTS b_aliases")

@@ -1,17 +1,12 @@
 """Streaming ingest + incremental clustering: two micro-batches must
 produce the same cluster assignment for the same entity (stable roots
-across batches), and the watermarked window agg must run."""
+across batches), and the streamed partition must equal the batch one."""
 
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
-from t_res_spark.streaming.incremental import (
-    IncrementalResolver,
-    stream_transcripts,
-    windowed_turn_counts,
-)
+from t_res_spark.streaming.incremental import IncrementalResolver, stream_transcripts
 
 
 @pytest.fixture()
@@ -67,29 +62,6 @@ def test_incremental_two_batches(
     assert len(tarvik) >= 2
     assert len({r["cluster_id"] for r in tarvik}) == 1  # stable across batches
     assert any(r["prediction"] == "E2" for r in rows.values())
-
-
-def test_windowed_counts_runs(spark, tmp_path):
-    in_dir = str(tmp_path / "win_in")
-    from datetime import datetime
-
-    _write_batch(
-        spark, in_dir,
-        [("c1", i, "user" if i % 2 else "tool", f"turn {i}", None,
-          datetime(2024, 1, 1, 0, i % 5)) for i in range(10)],
-    )
-    agg = windowed_turn_counts(stream_transcripts(spark, in_dir))
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("win_counts")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    assert q.awaitTermination(120), 'stream did not drain in 120s'
-    # append mode emits only closed windows; the aggregation ran end-to-end
-    assert spark.table("win_counts").columns == ["window", "role", "turns"]
 
 
 def test_streaming_equals_batch_partition(spark, alias_kb, tmp_path):

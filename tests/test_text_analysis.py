@@ -90,14 +90,3 @@ def test_multimodal_plumbing(spark):
     # determinism: same payload → same feature
     again = {r["media_id"]: r for r in multimodal.extract_media_features(media).collect()}
     assert out["m1"]["feature"] == again["m1"]["feature"]
-
-
-def test_video_frame_sampling(spark):
-    media = spark.createDataFrame(
-        [("v1", "video", None, ("video/mp4", None, None, 3500))],
-        "media_id string, kind string, payload binary, "
-        "meta struct<mime:string,width:int,height:int,duration_ms:int>",
-    )
-    frames = multimodal.sample_video_frames(media, every_ms=1000)
-    ts = [r["frame_ts_ms"] for r in frames.collect()]
-    assert ts == [0, 1000, 2000, 3000]
