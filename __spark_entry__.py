@@ -989,10 +989,10 @@ def q_er_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     on file listing order, so the raw root is not SQL-stateable; the
     PARTITION it induces is, and that is what this gate checks
     value-exact). The pinned-root mechanics themselves (stable ids
-    across restarts, crash-swap recovery) are covered by
-    tests/test_streaming.py + test_properties.py streaming/batch
-    equivalence. Reference has no streaming surface (SURVEY §2.10);
-    this is the engine's forward-looking extension."""
+    across restarts, replayed batch ids as no-ops, streaming/batch
+    equivalence) are covered by tests/test_streaming.py. Reference has
+    no streaming surface (SURVEY §2.10); this is the engine's
+    forward-looking extension."""
     import atexit
     import shutil
     import tempfile

@@ -48,14 +48,16 @@ def run_experiment(
        experiment.py:404-416), joined onto its linked mentions;
     4. micro P/R/F1 of prediction vs gold QID — one aggregation row.
 
-    The returned frames read the run's cached mentions and scratch
-    tables; the scratch dir is removed at interpreter exit
+    The results are written to the run's scratch dir and the mentions
+    cache is released before return, so the returned frames read only
+    parquet; the scratch dir is removed at interpreter exit
     (``plans.pipeline``'s ``_LIVE_SCRATCH`` backstop).
     """
     from ..operators.alignment import align_spans
     from ..plans.pipeline import PipelineConfig, resolve
     from ..sources.ingest import parse_annotations, parse_sentences
     from ..sources.readers import merge_splits
+    from ..sources.tables import write_stage
 
     sentences = parse_sentences(rows)
     annotations = parse_annotations(rows)
@@ -94,6 +96,8 @@ def run_experiment(
         results = merge_splits(
             results.withColumn("article_id", F.col("conv_id")), split_col
         )
+    results = write_stage(results, f"{res.scratch[0]}/results")
+    res.mentions.unpersist()
 
     # micro metrics over gold-covered mentions: NIL-vs-NIL is a true
     # negative in the reference's scorer; misses (no gold) are skipped

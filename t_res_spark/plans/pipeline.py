@@ -166,16 +166,15 @@ class PipelineResult:
     scratch: tuple | None = None
 
     def unpersist(self) -> None:
-        """Release the persisted shared stages and delete the run's
-        scratch dir — call when done with the result in a long-lived
-        session. (The atexit backstop removes anything still
+        """Release the mentions cache (the one persisted stage) and
+        delete the run's scratch dir — call when done with the result in
+        a long-lived session. (The atexit backstop removes anything still
         outstanding, and resolve() itself cleans up when a stage
         raises.)"""
-        for df in (self.mentions, self.linked):
-            try:
-                df.unpersist()
-            except Exception:
-                pass
+        try:
+            self.mentions.unpersist()
+        except Exception:
+            pass
         _drop_scratch(self.scratch)
         self.scratch = None
 

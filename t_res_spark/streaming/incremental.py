@@ -17,27 +17,35 @@ first time an entity is seen; later batches reuse it — mentions of the
 same entity land in the same cluster across batches without
 re-clustering history (the streaming analog of the memo-cache J12).
 
+State layout: both tables under ``state_dir`` are partitioned by batch
+id, ``cluster_roots/batch_id=<k>`` and ``clusters/batch_id=<k>``, and
+every partition is written by ``sources.tables.write_stage``, so a state
+dir may be any Hadoop-FS path or URI. Batch ``k`` reads only the roots
+of batches ``< k`` and overwrites only its own two partitions, so a
+replayed batch id (``foreachBatch`` is at-least-once) rewrites the same
+rows: output is exactly-once with no rename, recovery or append step.
+
 Label-space note: the batch engine labels clusters in PREDICTION space
 (clustering.py — labels are self-stable, no state needed).
 This streaming surface keeps MENTION-space labels deliberately: it
-demonstrates the pinned-root state-table pattern (crash-safe swap,
-recovery) that prediction-space labels cannot exercise, and consumers
-get instance-level roots. The partition induced on mentions is
-identical either way; only the label representative differs."""
+demonstrates the pinned-root state-table pattern that prediction-space
+labels cannot exercise, and consumers get instance-level roots. The
+partition induced on mentions is identical either way; only the label
+representative differs."""
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.pipeline import PipelineConfig, resolve
+from ..sources.tables import hadoop_fs, write_stage
 
 TRANSCRIPT_SCHEMA_DDL = (
     "conv_id string, turn_idx int, role string, text string, "
     "tool string, ts timestamp"
 )
+_ROOTS_DDL = "prediction string, cluster_id string"
 
 
 def stream_transcripts(spark: SparkSession, path: str) -> DataFrame:
@@ -65,32 +73,9 @@ class IncrementalResolver:
     ):
         self.spark = spark
         self.aliases = aliases
-        self.state_dir = state_dir
+        self.state_dir = state_dir.rstrip("/")
         self.threshold = threshold
         self.top_k = top_k
-        os.makedirs(state_dir, exist_ok=True)
-
-    def _roots_path(self) -> str:
-        return os.path.join(self.state_dir, "cluster_roots")
-
-    def _out_path(self) -> str:
-        return os.path.join(self.state_dir, "clusters")
-
-    def _load_roots(self) -> DataFrame:
-        """Load the pinned-roots state. Missing path → empty state;
-        a live dir missing but ``_old`` present (crash mid-swap) →
-        recover from ``_old``. Any OTHER read error (genuine
-        corruption) propagates loudly — silently resetting state would
-        re-pin seen entities to new roots, breaking the
-        stable-cluster-id-across-restarts contract."""
-        path = self._roots_path()
-        if not os.path.exists(path) and os.path.exists(path + "_old"):
-            path = path + "_old"
-        if not os.path.exists(path):
-            return self.spark.createDataFrame(
-                [], "prediction string, cluster_id string"
-            )
-        return self.spark.read.parquet(path)
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         res = resolve(
@@ -103,56 +88,44 @@ class IncrementalResolver:
             res.unpersist()
 
     def _fold(self, linked: DataFrame, batch_id: int) -> None:
-        """Pin roots for the batch's new entities, then append its
-        mentions with their cluster ids."""
-        roots = self._load_roots().withColumnRenamed("cluster_id", "known_root")
-        joined = linked.join(roots, "prediction", "left").cache()
+        """Pin roots for the batch's new entities, then write its
+        mentions with their cluster ids, each into this batch's own
+        partition."""
+        roots_dir = f"{self.state_dir}/cluster_roots"
+        fs, hpath = hadoop_fs(self.spark, roots_dir)
+        if fs.exists(hpath):
+            # earlier batches only: a replay must not see its own pins
+            known = (
+                self.spark.read.schema(f"{_ROOTS_DDL}, batch_id int")
+                .parquet(roots_dir)
+                .filter(F.col("batch_id") < batch_id)
+                .drop("batch_id")
+            )
+        else:
+            known = self.spark.createDataFrame([], _ROOTS_DDL)
 
         # new entities this batch → pin their root = min mention_id seen
-        new_roots = (
-            joined.filter(F.col("known_root").isNull() & (F.col("prediction") != "NIL"))
+        pinned = write_stage(
+            linked.filter(F.col("prediction") != "NIL")
+            .join(known, "prediction", "left_anti")
             .groupBy("prediction")
-            .agg(F.min("mention_id").alias("cluster_id"))
+            .agg(F.min("mention_id").alias("cluster_id")),
+            f"{roots_dir}/batch_id={batch_id}",
         )
-        merged_roots = self._load_roots().unionByName(new_roots).dropDuplicates(
-            ["prediction"]
+        roots = known.unionByName(pinned).withColumnRenamed("cluster_id", "root")
+        write_stage(
+            linked.join(roots, "prediction", "left").select(
+                "mention_id",
+                "mention",
+                "prediction",
+                F.coalesce("root", "mention_id").alias("cluster_id"),
+            ),
+            f"{self.state_dir}/clusters/batch_id={batch_id}",
         )
-        merged_roots.write.mode("overwrite").parquet(self._roots_path() + "_next")
-        # rename-aside swap (live → _old, _next → live, drop _old): a
-        # crash at any point leaves either the live dir or _old intact,
-        # and _load_roots recovers from _old. On a real cluster this is
-        # an Iceberg snapshot commit.
-        import shutil
-
-        live, old = self._roots_path(), self._roots_path() + "_old"
-        # _old is only deleted while live exists — on a recovery batch
-        # (prior crash left ONLY _old), deleting it before promoting
-        # _next would open a window with no durable copy at all
-        if os.path.exists(live):
-            if os.path.exists(old):
-                shutil.rmtree(old)
-            os.rename(live, old)
-        os.rename(live + "_next", live)
-        if os.path.exists(old):
-            shutil.rmtree(old)
-
-        all_roots = self.spark.read.parquet(self._roots_path()).withColumnRenamed(
-            "cluster_id", "root"
-        )
-        out = (
-            linked.join(all_roots, "prediction", "left")
-            .withColumn("cluster_id", F.coalesce("root", "mention_id"))
-            .withColumn("batch_id", F.lit(batch_id))
-            .select(
-                "mention_id", "mention", "prediction", "cluster_id", "batch_id"
-            )
-        )
-        out.write.mode("append").parquet(self._out_path())
-        joined.unpersist()
 
     def start(self, stream: DataFrame, trigger_once: bool = True):
         writer = stream.writeStream.foreachBatch(self.process_batch).option(
-            "checkpointLocation", os.path.join(self.state_dir, "_checkpoint")
+            "checkpointLocation", f"{self.state_dir}/_checkpoint"
         )
         if trigger_once:
             writer = writer.trigger(availableNow=True)

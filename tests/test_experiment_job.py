@@ -34,7 +34,7 @@ def _mk_rows(spark):
     )
 
 
-def test_run_experiment_end_to_end(spark):
+def test_run_experiment_end_to_end(spark, persisted_rdds):
     from t_res_spark.jobs.experiment_job import run_experiment
 
     aliases = spark.createDataFrame(
@@ -45,7 +45,10 @@ def test_run_experiment_end_to_end(spark):
         ],
         "alias string, qid string, relv double, abs_relv double",
     )
+    before = persisted_rdds()
     results, metrics = run_experiment(spark, _mk_rows(spark), aliases)
+    # the run releases its mentions cache; the frames read parquet
+    assert persisted_rdds() <= before
     got = {r["mention"]: r for r in results.collect()}
     assert got["London"]["prediction"] == "Q84"
     assert got["London"]["gold_qid"] == "Q84"

@@ -1,7 +1,9 @@
-"""Ordered eval sink (S14), checkpoint catalog mechanics, and the F7/F8
-scalar helpers."""
+"""Ordered eval sink (S14), checkpoint catalog mechanics, the F7/F8
+scalar helpers, and the one-write-path guard."""
 
+import ast
 import os
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -60,3 +62,43 @@ def test_checkpoint_overwrite_flag(spark, tmp_path):
     cat_ow = CheckpointCatalog(spark, str(tmp_path), overwrite=True)
     out3 = cat_ow.materialize(lambda: df2, "t", cfg)
     assert [r["v"] for r in out3.collect()] == [2]
+
+
+def test_tables_reach_storage_only_through_spark():
+    """Spark-free guard: a table reaches storage through a Spark write
+    (``write_stage`` / ``CheckpointCatalog``), which works on any
+    Hadoop-FS path or URI and overwrites whole tables or partitions.
+    So nothing under ``t_res_spark/`` renames or removes files with
+    ``os``/``shutil`` (driver-local only) or writes with
+    ``mode("append")`` (a replayed write duplicates rows). The one
+    exception is ``plans/pipeline.py``'s remover for a local-master
+    tempdir scratch, which must still work after the JVM is gone."""
+    pkg = Path(__file__).resolve().parent.parent / "t_res_spark"
+    hits = []
+
+    def visit(node, rel, owners):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            owners = owners + (node.name,)
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+            fn, base = node.func, node.func.value
+            name = base.id if isinstance(base, ast.Name) else None
+            bad = (
+                (name == "os" and fn.attr in ("rename", "replace"))
+                or name == "shutil"
+                or (
+                    fn.attr == "mode"
+                    and node.args
+                    and isinstance(node.args[0], ast.Constant)
+                    and node.args[0].value == "append"
+                )
+            )
+            allowed = rel == "plans/pipeline.py" and "_scratch_dir" in owners
+            if bad and not allowed:
+                hits.append(f"{rel}:{node.lineno} {ast.unparse(fn)}")
+        for child in ast.iter_child_nodes(node):
+            visit(child, rel, owners)
+
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        visit(ast.parse(path.read_text(encoding="utf-8")), rel, ())
+    assert not hits, "storage writes outside write_stage: " + ", ".join(hits)

@@ -1,12 +1,17 @@
 """Streaming ingest + incremental clustering: two micro-batches must
 produce the same cluster assignment for the same entity (stable roots
-across batches), and the streamed partition must equal the batch one."""
+across batches), the streamed partition must equal the batch one, and a
+replayed batch id must leave the output unchanged."""
 
 import os
 
 import pytest
 
-from t_res_spark.streaming.incremental import IncrementalResolver, stream_transcripts
+from t_res_spark.streaming.incremental import (
+    TRANSCRIPT_SCHEMA_DDL,
+    IncrementalResolver,
+    stream_transcripts,
+)
 
 
 @pytest.fixture()
@@ -122,3 +127,38 @@ def test_streaming_equals_batch_partition(spark, alias_kb, tmp_path):
     assert len(dict(stream_pairs)) == len(stream_pairs), "duplicate mention rows"
     assert partition(stream_pairs) == partition(batch_pairs)
     assert any(r["prediction"] == "NIL" for r in out), "no NIL mention streamed"
+
+
+@pytest.mark.parametrize("as_uri", [False, True], ids=["path", "uri"])
+def test_replayed_batch_is_a_noop(spark, alias_kb, tmp_path, as_uri):
+    """foreachBatch is at-least-once: Spark re-runs a batch id whose
+    micro-batch failed before its checkpoint commit. Replaying batch 1
+    must leave ``clusters`` exactly as it was, on a plain path and on a
+    ``file://`` URI state dir alike. ``process_batch`` is called
+    directly; no stream is needed to replay a batch id."""
+    from datetime import datetime
+
+    state = tmp_path / "state"
+    resolver = IncrementalResolver(
+        spark, alias_kb, state.as_uri() if as_uri else str(state)
+    )
+    t = datetime(2024, 1, 1)
+
+    def batch(rows):
+        return spark.createDataFrame(rows, TRANSCRIPT_SCHEMA_DDL)
+
+    def state_rows():
+        clusters = spark.read.parquet(str(state / "clusters"))
+        roots = spark.read.parquet(str(state / "cluster_roots"))
+        return (
+            sorted(map(tuple, clusters.select("mention_id", "prediction", "cluster_id").collect())),
+            sorted(map(tuple, roots.select("prediction", "cluster_id").collect())),
+        )
+
+    resolver.process_batch(batch([("c1", 0, "user", "we saw Tarvik today", None, t)]), 0)
+    second = batch([("c2", 0, "user", "report from Tarvvik and Belford", None, t)])
+    resolver.process_batch(second, 1)
+    before = state_rows()
+    assert len(before[0]) == 3 and len(before[1]) == 2
+    resolver.process_batch(second, 1)
+    assert state_rows() == before
