@@ -32,6 +32,8 @@ from dataclasses import dataclass, field
 import numpy as np
 import pandas as pd
 
+from .functions.text import phonetic_key_str
+
 EMB_DIM = 32
 ENTITY_PREFIX = "ENTITY/"  # rel_utils.py:73-78 namespace analog
 UNK_KEY = "#UNK#"  # entity_disambiguation.py:179-194
@@ -289,21 +291,9 @@ def generate(
     )
 
     # --- labeled pairs (FIXTURES.md §5) ------------------------------------
-    # within-block pairs; block key = python analog of functions.text.norm_key
-    def _norm(s: str) -> str:
-        return "".join(ch for ch in s.lower() if ch.isalnum())
-
-    def _phon(s: str) -> str:
-        n = _norm(s)
-        sk = "".join(ch for ch in n if ch not in "aeiouy0123456789")
-        out = []
-        for ch in sk:
-            if not out or out[-1] != ch:
-                out.append(ch)
-        return (n[:1] + "".join(out)) if n else ""
-
+    # within-block pairs, blocked on the phonetic key
     pm = planted.copy()
-    pm["block_key"] = pm["mention"].map(_phon)
+    pm["block_key"] = pm["mention"].map(phonetic_key_str)
     pair_rows = []
     for bk, grp in pm.groupby("block_key"):
         ids = grp[["mention_id", "qid"]].values.tolist()

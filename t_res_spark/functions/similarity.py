@@ -1,8 +1,9 @@
 """String- and geo-similarity kernels.
 
-Pure-Python pair kernels (wrapped in Arrow-batched pandas UDFs by the
-ranking operators — never row-at-a-time Python UDFs) plus native Spark
-column expressions for everything Catalyst can codegen.
+Pure-Python pair kernels (each wrapped once as an Arrow-batched pandas
+UDF by ``operators.ranking._pair_udf`` — never a row-at-a-time Python
+UDF) plus native Spark column expressions for everything Catalyst can
+codegen.
 
 Reference parity:
 - normalized Damerau-Levenshtein similarity:
@@ -17,23 +18,22 @@ Reference parity:
 
 Two Damerau-Levenshtein variants live here and they are NOT
 interchangeable: DuckDB's ``damerau_levenshtein`` implements the
-UNRESTRICTED variant (``dl_distance``/``dl_sim_udf`` — what the
+UNRESTRICTED variant (``dl_distance``/``dl_similarity`` — what the
 oracle-gated q_j3 uses; damerau_levenshtein('ca','abc') == 2), while
 pyxdameraulevenshtein — the reference's library — implements the
-restricted OSA variant (``osa_distance``/``damlev_sim_batch``;
-OSA('ca','abc') == 3). They differ only on transposition-adjacent
-inputs, but swapping OSA into an oracle-gated query WILL break the
-correctness gate.
+restricted OSA variant (``osa_distance``/``damlev_similarity``, the
+ranking methods' kernel; OSA('ca','abc') == 3). They differ only on
+transposition-adjacent inputs, but swapping OSA into an oracle-gated
+query WILL break the correctness gate.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # ---------------------------------------------------------------------------
-# pair kernels (called from batched pandas UDFs)
+# pair kernels (wrapped by operators.ranking._pair_udf)
 # ---------------------------------------------------------------------------
 
 
@@ -193,79 +193,9 @@ def fuzz_ratio(s1: str, s2: str) -> float:
     in every correct implementation, unlike Jaro-Winkler's variants).
     The reference thresholds this to classify OCR variants
     (/root/reference/utils/deezy_processing.py:68-83)."""
-    if _rf_fuzz is not None:
-        return float(_rf_fuzz.ratio(s1, s2))
     if not s1 and not s2:
         return 100.0
     return 100.0 * (2 * _lcs_length(s1, s2)) / (len(s1) + len(s2))
-
-
-# ---------------------------------------------------------------------------
-# batch kernels (pandas Series in/out — used inside pandas UDFs)
-# ---------------------------------------------------------------------------
-
-# rapidfuzz (C++) is used when importable — ~100x the pure-Python DP
-# kernels; the fallbacks compute the *identical integer distances*
-# (OSA / unrestricted DL / Indel), so results are bit-equal either way.
-# Jaro-Winkler deliberately has NO rapidfuzz path: rapidfuzz's JW is the
-# non-greedy variant and would silently change golden values.
-try:  # pragma: no cover - not installed in the sandbox
-    from rapidfuzz import fuzz as _rf_fuzz
-    from rapidfuzz.distance import OSA as _rf_osa
-    from rapidfuzz.distance import DamerauLevenshtein as _rf_dl
-except ImportError:
-    _rf_fuzz = _rf_osa = _rf_dl = None
-
-
-def fuzz_ratio_batch(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series(
-        [fuzz_ratio(x, y) for x, y in zip(a.astype(str), b.astype(str))],
-        index=a.index,
-        dtype="float64",
-    )
-
-
-def dl_sim_batch(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Unrestricted-DL similarity batch (DuckDB-exact), rapidfuzz-
-    accelerated when available."""
-    if _rf_dl is not None:
-        out = []
-        for x, y in zip(a.astype(str), b.astype(str)):
-            xl, yl = x.lower(), y.lower()
-            m = max(len(xl), len(yl))
-            out.append(1.0 if m == 0 else 1.0 - _rf_dl.distance(xl, yl) / m)
-        return pd.Series(out, index=a.index, dtype="float64")
-    return pd.Series(
-        [dl_similarity(x, y) for x, y in zip(a.astype(str), b.astype(str))],
-        index=a.index,
-        dtype="float64",
-    )
-
-
-def damlev_sim_batch(a: pd.Series, b: pd.Series) -> pd.Series:
-    if _rf_osa is not None:
-        out = []
-        for x, y in zip(a.astype(str), b.astype(str)):
-            xl, yl = x.lower(), y.lower()
-            m = max(len(xl), len(yl))
-            out.append(1.0 if m == 0 else 1.0 - _rf_osa.distance(xl, yl) / m)
-        return pd.Series(out, index=a.index, dtype="float64")
-    return pd.Series(
-        [damlev_similarity(x, y) for x, y in zip(a.astype(str), b.astype(str))],
-        index=a.index,
-        dtype="float64",
-    )
-
-
-def jaro_winkler_batch(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series(
-        [
-            jaro_winkler_similarity(x.lower(), y.lower())
-            for x, y in zip(a.astype(str), b.astype(str))
-        ],
-        index=a.index,
-        dtype="float64",
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -1,15 +1,16 @@
 """Text normalization — native column expressions where possible.
 
 Reference parity:
-- n-dash fix: replace ``—`` with ``,`` everywhere except position 0
-  (/root/reference/geoparser/recogniser.py:369-379).
 - alias noise filter: drop variants containing ``", "`` or ``" ("``
   (/root/reference/geoparser/ranking.py:216-247).
 - normalized blocking key + vowel-stripped phonetic-ish key (our analog
-  of the DeezyMatch candidate blocking; SURVEY §7.0 stage 2).
+  of the DeezyMatch candidate blocking; SURVEY §7.0 stage 2), with a
+  pure-Python mirror (``block_keys``) for the oracle and datagen.
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -43,6 +44,26 @@ def phonetic_key(s: Column) -> Column:
     skeleton = F.regexp_replace(lowered, "[aeiouy0-9]", "")
     collapsed = F.regexp_replace(skeleton, "(.)\\1+", "$1")
     return F.concat(F.substring(lowered, 1, 1), collapsed)
+
+
+def norm_key_str(s: str) -> str:
+    """Pure-Python ``norm_key``: ASCII-exact, as the Spark regex is —
+    every non-[a-z0-9] char goes, non-ASCII letters included."""
+    return re.sub("[^a-z0-9]", "", s.lower())
+
+
+def phonetic_key_str(s: str) -> str:
+    """Pure-Python ``phonetic_key``."""
+    n = norm_key_str(s)
+    skeleton = re.sub("[aeiouy0-9]", "", n)
+    return n[:1] + re.sub(r"(.)\1+", r"\1", skeleton)
+
+
+def block_keys(s: str) -> set[str]:
+    """Pure-Python ``operators.blocking.with_block_keys``: the prefixed
+    keys of one surface, empty keys dropped."""
+    keys = {"n:" + norm_key_str(s), "p:" + phonetic_key_str(s)}
+    return {k for k in keys if len(k) > 2}
 
 
 def normalize_wiki_url(url: Column) -> Column:

@@ -1,19 +1,26 @@
 """Stage 3 — candidate ranking (the reference's Ranker re-expressed).
 
-Method map (reference dispatch: /root/reference/geoparser/ranking.py:609-617):
+Every method but ``perfectmatch`` is one program, ``_match``, the
+reference's Ranker loop (ranking.py:399-469, :471-568) as a fuzzy join:
+exact hits short-circuit at 1.0, the other surfaces are paired with the
+alias space (block keys + salt), scored, filtered and cut per surface.
+Only the score and the cut vary:
 
-- ``perfect_match`` (ranking.py:286-325): broadcast hash equi-join of
-  distinct mention surfaces against the alias table; match score 1.0.
-- ``partial_match`` containment (ranking.py:363-397): blocked theta
-  join with a native `instr` predicate, score = length ratio.
-- ``partial_match`` damlev (ranking.py:327-361): blocked pair space +
-  Arrow-batched pandas UDF computing normalized Damerau-Levenshtein;
-  keep-all-ties top-1 via dense_rank (ranking.py:456-465 semantics).
-- ``deezy-analog`` (ranking.py:471-568): the DeezyMatch GRU + faiss ANN
-  stage becomes hashed char-n-gram embeddings + **native column-math
-  cosine** (embeddings are unit vectors, so dot == cosine; computed with
-  zip_with/aggregate — whole-stage-codegen, no UDF) over the blocked
-  pair space, threshold + top-k per query (W7).
+- ``perfect_match`` (ranking.py:286-325): hash equi-join of distinct
+  mention surfaces against the alias table; match score 1.0.
+- ``partial_match`` containment (ranking.py:363-397): native `instr`
+  length ratio; damlev (ranking.py:327-361): normalized OSA
+  Damerau-Levenshtein. Both keep all ties at the best score via
+  dense_rank (ranking.py:456-465 semantics).
+- ``fuzzy`` / ``jarowinkler``: DL or Jaro-Winkler with a threshold and
+  a deterministic (score desc, variation asc) top-k.
+- ``embedding_match`` (ranking.py:471-568): the DeezyMatch GRU + faiss
+  ANN stage becomes hashed char-n-gram embeddings + native column-math
+  cosine (unit vectors, so dot == cosine), threshold + top-k.
+
+String scores come from the pure-Python kernels in
+``functions.similarity``, each wrapped once by ``_pair_udf`` as an
+Arrow-batched pandas UDF.
 
 All methods share:
 - query dedup before scoring (ranking.py:674 / pipeline.py:682) —
@@ -39,34 +46,36 @@ from pyspark.sql.functions import pandas_udf
 
 from ..functions.similarity import (
     containment_score,
-    damlev_sim_batch,
-    dl_sim_batch,
-    fuzz_ratio_batch,
-    jaro_winkler_batch,
+    damlev_similarity,
+    dl_similarity,
+    fuzz_ratio,
+    jaro_winkler_similarity,
 )
 from ..functions.text import alias_noise_filter
 from .blocking import salted, with_block_keys
 from .similarity_search import _dot
 
 
-@pandas_udf(T.DoubleType())
-def damlev_sim_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    return damlev_sim_batch(a, b)
+def _pair_udf(sim):
+    """Arrow-batched pandas UDF (string, string) → double over the
+    pure-Python pair kernel ``sim``."""
+
+    def batch(a: pd.Series, b: pd.Series) -> pd.Series:
+        return pd.Series(
+            [sim(x, y) for x, y in zip(a.astype(str), b.astype(str))],
+            index=a.index,
+            dtype="float64",
+        )
+
+    return pandas_udf(batch, T.DoubleType())
 
 
-@pandas_udf(T.DoubleType())
-def dl_sim_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    return dl_sim_batch(a, b)
-
-
-@pandas_udf(T.DoubleType())
-def jaro_winkler_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    return jaro_winkler_batch(a, b)
-
-
-@pandas_udf(T.DoubleType())
-def fuzz_ratio_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    return fuzz_ratio_batch(a, b)
+damlev_sim_udf = _pair_udf(damlev_similarity)
+dl_sim_udf = _pair_udf(dl_similarity)
+jaro_winkler_udf = _pair_udf(
+    lambda a, b: jaro_winkler_similarity(a.lower(), b.lower())
+)
+fuzz_ratio_udf = _pair_udf(fuzz_ratio)
 
 
 def classify_ocr_variants(
@@ -157,14 +166,63 @@ def _blocked_pairs(
 ) -> DataFrame:
     """(mention, variation) candidate pair space via block keys + salt."""
     m = with_block_keys(queries.select("mention"), "mention")
-    a = with_block_keys(
-        aliases.select(F.col("alias")).distinct(), "alias"
-    ).withColumnRenamed("alias", "variation")
-    m_s, a_s = salted(m, a.withColumnRenamed("variation", "alias"), salt_factor)
-    a_s = a_s.withColumnRenamed("alias", "variation")
+    a = with_block_keys(aliases.select("alias").distinct(), "alias")
+    m_s, a_s = salted(m, a, salt_factor)
     pairs = m_s.join(a_s, ["block_key", "block_salt"], "inner")
     # a pair may share both keys — dedup before scoring
-    return pairs.select("mention", "variation").distinct()
+    return pairs.select("mention", F.col("alias").alias("variation")).distinct()
+
+
+def _match(
+    queries: DataFrame,
+    aliases: DataFrame,
+    score,
+    threshold: float | None = None,
+    top_k: int | None = None,
+    salt_factor: int = 8,
+    use_blocking: bool = True,
+) -> DataFrame:
+    """The one ranking shape: exact → pairs → score → cut.
+
+    Surfaces that perfect-match are returned with score 1.0 and skip
+    scoring (the reference's `remainers` logic, ranking.py:441-444).
+    Every other surface is paired with the blocked alias space (the
+    unblocked cross join when ``use_blocking=False`` — the reference's
+    full scan, for parity tests on small KBs only), and
+    ``score(pairs, missed)`` adds a ``score`` column. Rows keep when
+    ``score >= threshold`` (or, with no threshold, when the score is not
+    NULL). The per-surface cut keeps every pair at the best score when
+    ``top_k`` is None (dense_rank == 1 reproduces `[:1]` of sorted
+    unique scores, ranking.py:456-465), else the first ``top_k`` by
+    (score desc, variation asc)."""
+    exact = perfect_match(queries, aliases)
+    missed = queries.join(exact.select("mention"), "mention", "left_anti")
+    if use_blocking:
+        pairs = _blocked_pairs(missed, aliases, salt_factor)
+    else:
+        pairs = missed.crossJoin(
+            aliases.select(F.col("alias").alias("variation")).distinct()
+        )
+    s = F.col("score")
+    scored = score(pairs, missed).filter(
+        s.isNotNull() if threshold is None else s >= F.lit(threshold)
+    )
+    if top_k is None:
+        w = Window.partitionBy("mention").orderBy(F.desc("score"))
+        rank, limit = F.dense_rank().over(w), 1
+    else:
+        w = Window.partitionBy("mention").orderBy(F.desc("score"), F.asc("variation"))
+        rank, limit = F.row_number().over(w), top_k
+    kept = scored.withColumn("rnk", rank).filter(F.col("rnk") <= limit)
+    return exact.unionByName(kept.select("mention", "variation", "score"))
+
+
+def _pair_score(kernel):
+    """``_match`` score function: ``kernel(mention, variation)`` — an
+    Arrow pair UDF or a native column expression."""
+    return lambda pairs, _missed: pairs.withColumn(
+        "score", kernel(F.col("mention"), F.col("variation"))
+    )
 
 
 def partial_match(
@@ -175,44 +233,11 @@ def partial_match(
     use_blocking: bool = True,
 ) -> DataFrame:
     """J2/J3 — containment or Damerau-Levenshtein partial match with the
-    reference's keep-all-ties top-1 (ranking.py:399-469).
-
-    Semantics: surfaces that perfect-match are returned with score 1.0
-    and skip fuzzy scoring (the reference's `remainers` logic,
-    ranking.py:441-444); every other surface is scored against the
-    blocked alias space and keeps only its best distinct score
-    (ties all kept — dense_rank == 1 reproduces `[:1]` of sorted unique
-    scores, ranking.py:456-465).
-
-    ``use_blocking=False`` reproduces the reference's unblocked full
-    scan for small KBs (parity testing only — never at scale).
-    """
-    exact = perfect_match(queries, aliases)
-    missed = queries.join(exact.select("mention"), "mention", "left_anti")
-
-    if use_blocking:
-        pairs = _blocked_pairs(missed, aliases, salt_factor)
-    else:
-        pairs = missed.crossJoin(
-            aliases.select(F.col("alias").alias("variation")).distinct()
-        )
-
-    if damlev:
-        scored = pairs.withColumn(
-            "score", damlev_sim_udf(F.col("mention"), F.col("variation"))
-        )
-    else:
-        scored = pairs.withColumn(
-            "score", containment_score(F.col("mention"), F.col("variation"))
-        ).filter(F.col("score").isNotNull())
-
-    w = Window.partitionBy("mention").orderBy(F.desc("score"))
-    top1 = (
-        scored.withColumn("rnk", F.dense_rank().over(w))
-        .filter(F.col("rnk") == 1)
-        .drop("rnk")
+    reference's keep-all-ties top-1 (ranking.py:399-469)."""
+    score = _pair_score(damlev_sim_udf if damlev else containment_score)
+    return _match(
+        queries, aliases, score, salt_factor=salt_factor, use_blocking=use_blocking
     )
-    return exact.unionByName(top1.select("mention", "variation", "score"))
 
 
 def embedding_match(
@@ -228,8 +253,7 @@ def embedding_match(
     Query surfaces missing an exact match are compared to blocked alias
     candidates by embedding cosine; ``score = cosine`` (the reference's
     ``1 - dist`` cosine branch, ranking.py:558-562), thresholded and
-    top-k'd per query with deterministic (score desc, variation asc)
-    tie-break.
+    top-k'd per query.
 
     Query-side embeddings are computed on the fly with the same hashed
     n-gram encoder used for the KB (datagen.hashed_ngram_embedding) via
@@ -241,32 +265,24 @@ def embedding_match(
     def embed_udf(s: pd.Series) -> pd.Series:
         return s.astype(str).map(lambda x: hashed_ngram_embedding(x, EMB_DIM).tolist())
 
-    exact = perfect_match(queries, aliases)
-    missed = queries.join(exact.select("mention"), "mention", "left_anti")
-    pairs = _blocked_pairs(missed, aliases, salt_factor)
-
-    q_emb = missed.select("mention").withColumn("q_emb", embed_udf("mention"))
     kb = embeddings_kb.select(
         F.col("key").alias("variation"), F.col("emb").alias("v_emb")
     )
-    # No broadcast hint on q_emb: on OCR-noisy corpora most surfaces
-    # miss the exact match, so this side grows with the corpus — AQE
-    # promotes it to broadcast only when actually small.
-    scored = (
-        pairs.join(q_emb, "mention")
-        .join(kb, "variation", "inner")
-        # both sides are unit vectors, so the dot product is the cosine
-        # (the reference's faiss cosine, ranking.py:549-562)
-        .withColumn("score", _dot(F.col("q_emb"), F.col("v_emb")))
-        .filter(F.col("score") >= F.lit(threshold))
-    )
-    w = Window.partitionBy("mention").orderBy(F.desc("score"), F.asc("variation"))
-    topk = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= top_k)
-        .select("mention", "variation", "score")
-    )
-    return exact.unionByName(topk)
+
+    def cosine(pairs: DataFrame, missed: DataFrame) -> DataFrame:
+        # No broadcast hint on q_emb: on OCR-noisy corpora most surfaces
+        # miss the exact match, so this side grows with the corpus — AQE
+        # promotes it to broadcast only when actually small.
+        q_emb = missed.select("mention").withColumn("q_emb", embed_udf("mention"))
+        return (
+            pairs.join(q_emb, "mention")
+            .join(kb, "variation", "inner")
+            # both sides are unit vectors, so the dot product is the
+            # cosine (the reference's faiss cosine, ranking.py:549-562)
+            .withColumn("score", _dot(F.col("q_emb"), F.col("v_emb")))
+        )
+
+    return _match(queries, aliases, cosine, threshold, top_k, salt_factor)
 
 
 def resolve_candidates(matches: DataFrame, aliases: DataFrame) -> DataFrame:
@@ -279,32 +295,6 @@ def resolve_candidates(matches: DataFrame, aliases: DataFrame) -> DataFrame:
         "variation",
         "inner",
     ).select("mention", "variation", "score", "qid", "relv", "abs_relv")
-
-
-def _blocked_udf_match(
-    queries: DataFrame,
-    aliases: DataFrame,
-    score_udf,
-    threshold: float,
-    top_k: int,
-    salt_factor: int,
-) -> DataFrame:
-    """Shared shape of the UDF-scored methods: exact short-circuit +
-    blocked pair space + Arrow-batched score + threshold + deterministic
-    top-k per query surface."""
-    exact = perfect_match(queries, aliases)
-    missed = queries.join(exact.select("mention"), "mention", "left_anti")
-    pairs = _blocked_pairs(missed, aliases, salt_factor)
-    scored = pairs.withColumn(
-        "score", score_udf(F.col("mention"), F.col("variation"))
-    ).filter(F.col("score") >= F.lit(threshold))
-    w = Window.partitionBy("mention").orderBy(F.desc("score"), F.asc("variation"))
-    topk = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= top_k)
-        .select("mention", "variation", "score")
-    )
-    return exact.unionByName(topk)
 
 
 def find_candidates(
@@ -338,14 +328,9 @@ def find_candidates(
         matches = embedding_match(
             queries, aliases, embeddings_kb, threshold, top_k, salt_factor
         )
-    elif method == "fuzzy":
-        matches = _blocked_udf_match(
-            queries, aliases, damlev_sim_udf, threshold, top_k, salt_factor
-        )
-    elif method == "jarowinkler":
-        matches = _blocked_udf_match(
-            queries, aliases, jaro_winkler_udf, threshold, top_k, salt_factor
-        )
+    elif method in ("fuzzy", "jarowinkler"):
+        score = _pair_score(damlev_sim_udf if method == "fuzzy" else jaro_winkler_udf)
+        matches = _match(queries, aliases, score, threshold, top_k, salt_factor)
     else:
         raise ValueError(f"unknown ranking method: {method}")
     return resolve_candidates(matches, aliases)

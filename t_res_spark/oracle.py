@@ -14,31 +14,8 @@ import pandas as pd
 
 from .datagen import FixtureSet
 from .functions.similarity import damlev_similarity
+from .functions.text import block_keys
 from .operators.extraction import extract_mentions_from_text
-
-
-def _norm(s: str) -> str:
-    return "".join(ch for ch in s.lower() if ch.isalnum())
-
-
-def _phon(s: str) -> str:
-    n = _norm(s)
-    sk = "".join(ch for ch in n if ch not in "aeiouy0123456789")
-    out: list[str] = []
-    for ch in sk:
-        if not out or out[-1] != ch:
-            out.append(ch)
-    return (n[:1] + "".join(out)) if n else ""
-
-
-def block_keys(s: str) -> set[str]:
-    keys = set()
-    n, p = _norm(s), _phon(s)
-    if len(n) > 0:
-        keys.add("n:" + n)
-    if len(p) > 0:
-        keys.add("p:" + p)
-    return {k for k in keys if len(k) > 2}
 
 
 def resolve_oracle(

@@ -77,36 +77,39 @@ class TResService:
     # trusts the caller to send one sentence); sent_idx is flattened
     # to 0 to preserve the endpoint's output contract either way.
     def resolve_sentence(self, text: str) -> list[dict]:
-        out = plan_api.run_text(
-            self.spark, text, self.aliases, entities=self.entities,
-            ranking_method=self.ranking_method, threshold=self.threshold,
-            top_k=self.top_k,
-        )
+        out = self.resolve_full_text(text)
         for d in out:
             d["sent_idx"] = 0
         return out
 
-    # /run_ner (app_template.py:85-94): recognition only
+    # /run_ner (app_template.py:85-94): recognition only, with the same
+    # script-agnostic extractor the resolve endpoints use (cased rule
+    # tagger ∪ gazetteer-anchored uncased tagger)
     def run_ner(self, text: str) -> list[dict]:
-        from .operators.extraction import extract_mentions
+        from .operators.gazetteer import extract_mentions_full
 
         turns = plan_api.sentence_turns(
             self.spark, plan_api.split_sentences(text)
         )
-        return _mentions_payload(extract_mentions(turns).collect())
+        mentions = extract_mentions_full(turns, self.aliases, alias_col="alias")
+        return _mentions_payload(mentions.collect())
 
-    # /run_candidate_selection (app_template.py:97-101)
-    def run_candidate_selection(self, toponyms: list[str]) -> dict:
+    def _candidates(self, toponyms: list[str]):
         from .operators.ranking import find_candidates
 
         queries = self.spark.createDataFrame(
             [(t,) for t in toponyms], "mention string"
         )
-        rows = find_candidates(
+        return find_candidates(
             queries, self.aliases, method=self.ranking_method,
             threshold=self.threshold, top_k=self.top_k,
-        ).collect()
-        match_map, _, _ = plan_api.candidate_maps(rows)
+        )
+
+    # /run_candidate_selection (app_template.py:97-101)
+    def run_candidate_selection(self, toponyms: list[str]) -> dict:
+        match_map, _, _ = plan_api.candidate_maps(
+            self._candidates(toponyms).collect()
+        )
         out: dict = {t: {} for t in toponyms}
         for mention, variations in match_map.items():
             out[mention] = {
@@ -118,21 +121,13 @@ class TResService:
     # /run_disambiguation (app_template.py:104-111)
     def run_disambiguation(self, toponyms: list[str]) -> dict:
         from .operators.linking import most_popular
-        from .operators.ranking import find_candidates
 
-        queries = self.spark.createDataFrame(
-            [(t,) for t in toponyms], "mention string"
-        )
-        cands = find_candidates(
-            queries, self.aliases, method=self.ranking_method,
-            threshold=self.threshold, top_k=self.top_k,
-        )
         preds = {
             r["mention"]: {
                 "prediction": r["prediction"],
                 "ed_score": round(float(r["link_score"]), 3),
             }
-            for r in most_popular(cands).collect()
+            for r in most_popular(self._candidates(toponyms)).collect()
         }
         return {
             t: preds.get(t, {"prediction": "NIL", "ed_score": 0.0})

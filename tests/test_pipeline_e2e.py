@@ -138,7 +138,8 @@ def test_config_dispatch_all_ranking_methods(spark, tiny_dir):
 
 # Stage functions and the modules allowed to call them: the defining
 # module, resolve() itself, the gazetteer extractor (which wraps the
-# cased one) and the serving endpoints that expose a single stage.
+# cased one) and the serving endpoints that expose a single stage
+# (``_candidates`` is the shared body of the two ranking endpoints).
 _STAGE_DEFS = {
     "find_candidates": "operators/ranking.py",
     "extract_mentions": "operators/extraction.py",
@@ -147,7 +148,9 @@ _STAGE_DEFS = {
     "link_mentions": "operators/linking.py",
 }
 _STAGE_WIRING = {"plans/pipeline.py", "operators/gazetteer.py"}
-_STAGE_ENDPOINTS = {"run_ner", "run_candidate_selection", "run_disambiguation"}
+_STAGE_ENDPOINTS = {
+    "run_ner", "run_candidate_selection", "run_disambiguation", "_candidates",
+}
 
 
 def test_resolve_is_the_only_stage_wiring():

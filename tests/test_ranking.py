@@ -4,24 +4,32 @@
 import pytest
 from pyspark.sql import functions as F
 
+from t_res_spark.functions.similarity import damlev_similarity, jaro_winkler_similarity
 from t_res_spark.operators import ranking
+from t_res_spark.oracle import block_keys
+
+
+_KB_ROWS = [
+    ("London", "Q84", 0.875, 43000000.0),
+    ("London", "Q2477346", 0.125, 620000.0),
+    ("Lancaster", "Q211583", 0.75, 300000.0),
+    ("New York City", "Q60", 0.875, 9000000.0),
+    ("New York", "Q60", 0.5, 5000000.0),
+    ("Sheffield", "Q42448", 0.875, 4000000.0),
+    ("Shefneld", "Q42448", 0.125, 1000.0),
+    # share London's phonetic block, so a surface there has several
+    # candidates and the cut rules differ
+    ("Londen", "Q3", 0.5, 50.0),
+    ("Lindenn", "Q4", 0.5, 50.0),
+    # noisy aliases dropped at load (ranking.py:221-227)
+    ("London, Greater London", "Q84", 0.5, 100.0),
+    ("London (fictional)", "Q84", 0.5, 100.0),
+]
 
 
 @pytest.fixture(scope="module")
 def kb(spark):
-    rows = [
-        ("London", "Q84", 0.875, 43000000.0),
-        ("London", "Q2477346", 0.125, 620000.0),
-        ("Lancaster", "Q211583", 0.75, 300000.0),
-        ("New York City", "Q60", 0.875, 9000000.0),
-        ("New York", "Q60", 0.5, 5000000.0),
-        ("Sheffield", "Q42448", 0.875, 4000000.0),
-        ("Shefneld", "Q42448", 0.125, 1000.0),
-        # noisy aliases dropped at load (ranking.py:221-227)
-        ("London, Greater London", "Q84", 0.5, 100.0),
-        ("London (fictional)", "Q84", 0.5, 100.0),
-    ]
-    return spark.createDataFrame(rows, "alias string, qid string, relv double, abs_relv double")
+    return spark.createDataFrame(_KB_ROWS, "alias string, qid string, relv double, abs_relv double")
 
 
 def _queries(spark, *surfaces):
@@ -191,3 +199,114 @@ def test_classify_ocr_variants_containment_guard(spark):
     )
     got = {r["nn_word"]: r["label"] for r in ranking.classify_ocr_variants(pairs).collect()}
     assert got == {"carex": "neutral", "pool": "neutral"}
+
+
+def test_block_keys_mirror_matches_spark(spark):
+    """The oracle's pure-Python block keys equal Spark's
+    ``with_block_keys`` — including on non-ASCII names, which both
+    reduce to their [a-z0-9] chars."""
+    from t_res_spark.operators.blocking import with_block_keys
+
+    names = ["Łódź", "Évian", "São Paulo", "Zürich", "London", "İstanbul"]
+    keyed = with_block_keys(_queries(spark, *names), "mention").collect()
+    spark_keys = {n: set() for n in names}
+    for r in keyed:
+        spark_keys[r["mention"]].add(r["block_key"])
+    assert spark_keys == {n: block_keys(n) for n in names}
+
+
+def _containment(q, a):
+    ql, al = q.lower(), a.lower()
+    if ql in al:
+        return len(q) / len(a)
+    if al in ql:
+        return len(a) / len(q)
+    return None
+
+
+_SURFACES = ["London", "New York", "NEW YORK", "Londonn", "Londn", "Lvndon", "Shefiield",
+             "Sheffeild", "Shefneld", "Lancastor", "Lancaster City", "Xqzul"]
+_CLEAN_ALIASES = sorted({a for a, *_ in _KB_ROWS if ", " not in a and " (" not in a})
+
+
+def _reference(score, threshold=None, top_k=None):
+    """Pure-Python ranking: exact short-circuit, the aliases sharing a
+    block key, ``score``, then keep-all-ties top-1 (``top_k=None``) or
+    the (score desc, variation asc) top-k above ``threshold``."""
+    qids = {a: [q for alias, q, *_ in _KB_ROWS if alias == a] for a in _CLEAN_ALIASES}
+    out = set()
+    for s in _SURFACES:
+        if s in qids:
+            kept = [(s, 1.0)]
+        else:
+            scored = [(a, score(s, a)) for a in sorted(qids) if block_keys(s) & block_keys(a)]
+            scored = [(a, v) for a, v in scored
+                      if v is not None and (threshold is None or v >= threshold)]
+            if top_k is None:
+                best = max((v for _, v in scored), default=None)
+                kept = [(a, v) for a, v in scored if v == best]
+            else:
+                kept = sorted(scored, key=lambda av: (-av[1], av[0]))[:top_k]
+        out |= {(s, a, round(v, 9), q) for a, v in kept for q in qids[a]}
+    return out
+
+
+@pytest.mark.parametrize("method,reference", [
+    ("perfectmatch", dict(score=lambda q, a: None)),
+    ("partialmatch", dict(score=_containment)),
+    ("levenshtein", dict(score=damlev_similarity)),
+    ("fuzzy", dict(score=damlev_similarity, threshold=0.7, top_k=1)),
+    ("jarowinkler", dict(score=lambda q, a: jaro_winkler_similarity(q.lower(), a.lower()),
+                         threshold=0.8, top_k=2)),
+])
+def test_find_candidates_matches_reference(spark, kb, method, reference):
+    """Every string method through ``find_candidates`` is the one shape:
+    exact → blocked pairs → score → cut, checked against a pure-Python
+    reference over the block-key mirror and the similarity kernels."""
+    top_k = reference.get("top_k", 3)
+    got = ranking.find_candidates(
+        _queries(spark, *_SURFACES), kb, method=method,
+        threshold=reference.get("threshold", 0.7), top_k=top_k,
+    ).collect()
+    assert {(r["mention"], r["variation"], round(r["score"], 9), r["qid"]) for r in got} \
+        == _reference(**reference)
+
+
+def test_find_candidates_embcosine(spark, kb):
+    """``embcosine`` through ``find_candidates``: exact hits at 1.0, and
+    every other surface keeps its blocked aliases whose embedding cosine
+    clears the threshold, best first, at most ``top_k``."""
+    import numpy as np
+
+    from t_res_spark.datagen import hashed_ngram_embedding
+
+    aliases = _CLEAN_ALIASES
+    emb = spark.createDataFrame(
+        [(a, hashed_ngram_embedding(a).tolist()) for a in aliases],
+        "key string, emb array<float>",
+    )
+    got = ranking.find_candidates(
+        _queries(spark, *_SURFACES), kb, embeddings_kb=emb, method="embcosine",
+        threshold=0.5, top_k=1,
+    ).collect()
+
+    def cosine(q, a):
+        return float(np.dot(hashed_ngram_embedding(q).astype(np.float64),
+                            hashed_ngram_embedding(a).astype(np.float64)))
+
+    want = {}
+    for s in _SURFACES:
+        if s in aliases:
+            want[s] = {(s, 1.0)}
+            continue
+        scored = [(a, cosine(s, a)) for a in aliases if block_keys(s) & block_keys(a)]
+        scored = sorted((av for av in scored if av[1] >= 0.5), key=lambda av: (-av[1], av[0]))
+        want[s] = set(scored[:1])
+    have = {}
+    for r in got:
+        have.setdefault(r["mention"], set()).add((r["variation"], r["score"]))
+    assert {s: {a for a, _ in v} for s, v in have.items()} == \
+        {s: {a for a, _ in v} for s, v in want.items() if v}
+    for s, pairs in have.items():
+        ref = dict(want[s])
+        assert all(abs(v - ref[a]) < 1e-5 for a, v in pairs)

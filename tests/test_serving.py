@@ -113,3 +113,19 @@ def test_non_object_json_body_is_400(server):
     except urllib.error.HTTPError as e:
         status, body = e.code, json.loads(e.read())
     assert status == 400 and "text" in body["error"]
+
+
+def test_run_ner_tags_uncased_scripts(spark):
+    """/run_ner uses the same script-agnostic extractor as the resolve
+    endpoints: a KB surface in an uncased script is tagged, and its
+    span slices back to it."""
+    from t_res_spark.serving import TResService
+
+    aliases = spark.createDataFrame(
+        [("東京", "Q1490", 1.0, 100.0)],
+        "alias string, qid string, relv double, abs_relv double",
+    )
+    text = "昨日は東京に行きました"
+    got = TResService(spark, aliases).run_ner(text)
+    assert [m["mention"] for m in got] == ["東京"]
+    assert text[got[0]["pos"]:got[0]["end_pos"]] == "東京"
