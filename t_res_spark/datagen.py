@@ -32,9 +32,9 @@ from dataclasses import dataclass, field
 import numpy as np
 import pandas as pd
 
+from .functions.embedding import EMB_DIM, hashed_ngram_embedding
 from .functions.text import phonetic_key_str
 
-EMB_DIM = 32
 ENTITY_PREFIX = "ENTITY/"  # rel_utils.py:73-78 namespace analog
 UNK_KEY = "#UNK#"  # entity_disambiguation.py:179-194
 
@@ -99,29 +99,6 @@ def _corrupt(rng: random.Random, name: str) -> str:
         return name
     words[wi] = w2
     return " ".join(words)
-
-
-def hashed_ngram_embedding(key: str, dim: int = EMB_DIM) -> np.ndarray:
-    """Deterministic char-trigram hashed embedding (float32, unit-ish).
-
-    Replaces the reference's DeezyMatch GRU string encoder
-    (/root/reference/utils/deezy_processing.py:316-443) with a
-    data-independent feature hash: md5(trigram) picks (index, sign).
-    Similar strings share trigrams → high cosine; corruptions perturb a
-    few trigrams → still close. Zero model weights, fully reproducible
-    on any cluster."""
-    v = np.zeros(dim, dtype=np.float64)
-    s = f"^{key.lower()}$"
-    for i in range(len(s) - 2):
-        tri = s[i : i + 3]
-        h = hashlib.md5(tri.encode("utf-8")).digest()
-        idx = h[0] % dim
-        sign = 1.0 if h[1] % 2 == 0 else -1.0
-        v[idx] += sign
-    n = np.linalg.norm(v)
-    if n > 0:
-        v /= n
-    return v.astype(np.float32)
 
 
 @dataclass

@@ -3,14 +3,18 @@
 The reference bounds its fuzzy-match pair space with a faiss ANN index
 (/root/reference/geoparser/ranking.py:534-545) or doesn't bound it at
 all (partial_match scans every alias per query,
-ranking.py:399-469). At 10^12 turns neither works; this engine blocks
-on two cheap deterministic keys:
+ranking.py:399-469). At 10^12 turns neither works; ranking here blocks
+on one cheap deterministic key, ``functions.text.phonetic_key`` (first
+char + consonant skeleton, OCR-vowel tolerant).
 
-- ``norm_key``: lowercase alphanumeric skeleton (exact-ish forms);
-- ``phonetic_key``: consonant skeleton, OCR-vowel tolerant.
-
-Every (mention, alias) candidate pair shares at least one key. Keys are
-exploded to rows so one shuffle co-locates mention and alias sides.
+One key decides the pair set: the phonetic key is computed from the
+norm key (lowercase alphanumeric skeleton), so strings sharing a norm
+key share a phonetic key (and both are empty together). A norm-key join
+adds no pair, only duplicates; with one key each pair is joined once,
+and ``ranking._blocked_pairs`` needs no dedup until a family the
+phonetic key does not imply (one-deletion variants, say) is added.
+``with_block_keys`` (both families, a row per key) stays for callers
+outside the ranker: the gate's J3b query and perfbench's pair count.
 
 Skew: hot aliases (the "London" problem — Zipfian, asserted hot in the
 reference, pipeline.py:139) make some block keys huge. Mitigation here
@@ -28,19 +32,21 @@ from pyspark.sql import functions as F
 from ..functions.text import norm_key, phonetic_key
 
 
+def with_block_key(df: DataFrame, text_col: str) -> DataFrame:
+    """df plus ``block_key``, the phonetic key ranking joins on; rows
+    with an empty key (no [a-z0-9] char) are dropped."""
+    return df.withColumn("block_key", phonetic_key(F.col(text_col))).filter(
+        F.length("block_key") > 0
+    )
+
+
 def with_block_keys(df: DataFrame, text_col: str) -> DataFrame:
     """Explode df to (block_key, ...) rows — one per key family."""
-    keyed = df.withColumn(
-        "block_key",
-        F.explode(
-            F.array_distinct(
-                F.array(
-                    F.concat(F.lit("n:"), norm_key(F.col(text_col))),
-                    F.concat(F.lit("p:"), phonetic_key(F.col(text_col))),
-                )
-            )
-        ),
+    c = F.col(text_col)
+    keys = F.array(
+        F.concat(F.lit("n:"), norm_key(c)), F.concat(F.lit("p:"), phonetic_key(c))
     )
+    keyed = df.withColumn("block_key", F.explode(F.array_distinct(keys)))
     return keyed.filter(F.length("block_key") > 2)
 
 

@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..datagen import EMB_DIM, hashed_ngram_embedding
+from ..functions.embedding import EMB_DIM, embed_udf
 from ..functions.shuffle import pinned_repartition
 
 N_LOOPS = 10  # mulrel_ranker.py:403 (n_loops)
@@ -112,15 +112,15 @@ def _conv_coherence(
             [],
             columns=["conv_id", "mention_id", "mention", "prediction", "link_score"],
         )
-    # r6 — ONE stable global sort + numpy boundary slicing replaces the
-    # per-conversation ``sort_values``/``groupby`` passes: pandas group
-    # machinery cost ~2 ms per (tiny) conversation, which at 18k
-    # conversations per batch was HALF the kernel's wall time before a
-    # single loop iteration ran (measured 38 s single-core at sf1.0
+    # ONE stable global sort + numpy boundary slicing, not a
+    # per-conversation ``sort_values``/``groupby``: pandas group
+    # machinery costs ~2 ms per (tiny) conversation, which at 18k
+    # conversations per batch is half the kernel's wall time before a
+    # single loop iteration runs (measured 38 s single-core at sf1.0
     # with n_loops=0). Sorting by (conv_id, mention_id, qid) stably
-    # yields the exact per-conversation row order the old per-group
-    # sort produced, so the candidate lists — and every float that
-    # follows — are identical.
+    # yields the same per-conversation row order a per-group sort
+    # would, so the candidate lists — and every float that follows —
+    # are identical.
     pdf_s = pdf.sort_values(["conv_id", "mention_id", "qid"], kind="stable")
     conv_a = pdf_s["conv_id"].to_numpy()
     mid_a = pdf_s["mention_id"].to_numpy()
@@ -160,12 +160,12 @@ def _conv_coherence(
             mid: np.array([p for _, p, _ in cands], dtype=np.float64)
             for mid, cands in cand.items()
         }
-        # r6 — hoist every loop-invariant quantity out of the n_loops
-        # iteration (pure caching: the SAME numpy expressions evaluate
-        # on the SAME inputs, just once instead of 10x, so every score
-        # double is bit-identical): per-candidate unit embeddings
-        # (normalization cost dominated the old inner loop), the prior
-        # vectors, and the pinned-anchor candidate index.
+        # every loop-invariant quantity is computed once, outside the
+        # n_loops iteration (pure caching: the same numpy expressions on
+        # the same inputs, so every score double is bit-identical):
+        # per-candidate unit embeddings (normalization would otherwise
+        # dominate the inner loop), the prior vectors, and the
+        # pinned-anchor candidate index.
         unit = {
             mid: [e / max(np.linalg.norm(e), 1e-12) for _, _, e in cands]
             for mid, cands in cand.items()
@@ -274,15 +274,15 @@ def prerank_truncate(
     Pinned anchor rows (is_prior, U4) always survive."""
     from .similarity_search import cosine
 
-    # Embed DISTINCT surfaces, then attach per conversation (r6): the
-    # Arrow embed UDF previously ran once per (conv_id, mention) row —
-    # O(corpus); mention surfaces repeat heavily across conversations
-    # (ranking.py:674's distinct-before-score rationale), so embedding
-    # the distinct-surface domain and joining back does the same work
-    # on orders of magnitude fewer rows. Identical embeddings reach the
+    # Embed DISTINCT surfaces, then attach per conversation: embedding
+    # each (conv_id, mention) row would be O(corpus), and mention
+    # surfaces repeat heavily across conversations (ranking.py:674's
+    # distinct-before-score rationale), so embedding the
+    # distinct-surface domain and joining back does the same work on
+    # orders of magnitude fewer rows. Identical embeddings reach the
     # ctx fold, whose array_sort already makes the sum order canonical.
     surf = rows.select("mention").distinct().withColumn(
-        "m_emb", _embed_expr("mention")
+        "m_emb", embed_udf("mention")
     )
     ment = rows.select("conv_id", "mention").distinct().join(surf, "mention")
     # sort the collected (mention, emb) structs before the float fold:
@@ -326,16 +326,6 @@ def prerank_truncate(
     )
 
 
-def _embed_expr(col: str):
-    @F.pandas_udf(T.ArrayType(T.FloatType()))
-    def embed_udf(s: pd.Series) -> pd.Series:
-        return s.astype(str).map(
-            lambda x: hashed_ngram_embedding(x, EMB_DIM).tolist()
-        )
-
-    return embed_udf(col)
-
-
 def context_disambiguate(
     mentions: DataFrame,
     candidates: DataFrame,
@@ -361,7 +351,7 @@ def context_disambiguate(
 
     # normalized prior per (mention, qid): abs_relv / sum over mention
     w = Window.partitionBy("mention")
-    # embed DISTINCT qids and join back (r6, same rationale as the
+    # embed DISTINCT qids and join back (same rationale as the
     # prerank surface embed): candidate rows repeat qids across
     # mention surfaces, the entity embedding does not depend on the
     # surface.
@@ -369,7 +359,7 @@ def context_disambiguate(
         F.max("abs_relv").alias("abs_relv")
     )
     qid_emb = dedup.select("qid").distinct().withColumn(
-        "emb", _embed_expr("qid")
+        "emb", embed_udf("qid")
     )
     priored = dedup.withColumn(
         "prior", F.col("abs_relv") / F.sum("abs_relv").over(w)

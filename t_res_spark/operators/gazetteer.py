@@ -13,14 +13,14 @@ recomputes it in DuckDB rather than stating golden values):
 
 - gazetteer side: only surfaces with NO case signal participate
   (first char Lo, at least one Lo, zero Lu/Ll/Lt chars), length
-  bounded to [2, max_len] — the cased path stays untouched and the
+  bounded to [2, MAX_LEN] — the cased path stays untouched and the
   two paths are disjoint by construction (a cased mention needs an
   Lu char, an uncased surface has none);
 - text side: scan-pruned to turns containing an Lo char (same
   highest-leverage prefilter doctrine as the cased path);
 - candidate generation: every char position is a potential match
   start; positions are blocked against the gazetteer on the first
-  ``block_chars`` characters (a broadcast hash join — the per-position
+  ``BLOCK_CHARS`` characters (a broadcast hash join — the per-position
   probe IS the filter), then verified with one substring equality;
 - word-boundary rule: for aliases in spacing scripts (Arabic/Hebrew,
   where words are whitespace-delimited and a substring hit inside a
@@ -45,9 +45,7 @@ token: round(0.9 + min(len, 9)/100, 3).
 Scale notes (100 TB):
 - the gazetteer side is broadcast: bounded by the uncased subset of
   the alias KB (SCALE.md budgets the whole KB in the low GBs; the
-  uncased subset is a fraction of it). Above broadcast size the same
-  plan runs as a shuffle hash join on the block key — flip the
-  ``broadcast_gazetteer`` flag;
+  uncased subset is a fraction of it);
 - the position explode is linear in text length and pipelined inside
   whole-stage codegen (explode → substring → broadcast-probe, no
   materialization); only turns that pass the \\p{Lo} scan prefilter
@@ -67,41 +65,32 @@ _LO = "\\p{Lo}"
 _CASED = "[\\p{Lu}\\p{Ll}\\p{Lt}]"
 _SPACING_LO = "[\\p{IsArabic}\\p{IsHebrew}]"
 _LETTER = "\\p{L}"
+BLOCK_CHARS = 2  # gazetteer/position join key: the first chars of a match
+MAX_LEN = 24  # longest uncased gazetteer surface tagged
 
 
-def uncased_gazetteer(
-    aliases: DataFrame, alias_col: str = "alias", max_len: int = 24
-) -> DataFrame:
-    """The no-case-signal subset of the gazetteer (see module doc)."""
-    a = F.col(alias_col)
+def uncased_gazetteer(aliases: DataFrame) -> DataFrame:
+    """The no-case-signal subset of the gazetteer's ``alias`` column (see
+    module doc)."""
     return (
-        aliases.select(a.alias("g_alias"))
+        aliases.select(F.col("alias").alias("g_alias"))
         .filter(F.col("g_alias").rlike(f"^{_LO}"))
         .filter(~F.col("g_alias").rlike(_CASED))
-        .filter(F.length("g_alias").between(2, max_len))
+        .filter(F.length("g_alias").between(2, MAX_LEN))
         .distinct()
     )
 
 
-def gazetteer_tag_uncased(
-    transcripts: DataFrame,
-    aliases: DataFrame,
-    alias_col: str = "alias",
-    block_chars: int = 2,
-    max_len: int = 24,
-    broadcast_gazetteer: bool = True,
-) -> DataFrame:
+def gazetteer_tag_uncased(transcripts: DataFrame, aliases: DataFrame) -> DataFrame:
     """transcripts(conv_id, turn_idx, text, …) × gazetteer → mentions
     in uncased scripts. Entirely native column ops — no Python UDF
     anywhere on this path."""
-    gaz = (
-        uncased_gazetteer(aliases, alias_col, max_len)
+    gaz = F.broadcast(
+        uncased_gazetteer(aliases)
         .withColumn("g_len", F.length("g_alias"))
-        .withColumn("bk", F.substring("g_alias", 1, block_chars))
+        .withColumn("bk", F.substring("g_alias", 1, BLOCK_CHARS))
         .withColumn("g_bound", F.col("g_alias").rlike(_SPACING_LO))
     )
-    if broadcast_gazetteer:
-        gaz = F.broadcast(gaz)
 
     turns = transcripts.select("conv_id", "turn_idx", "text").filter(
         F.col("text").rlike(_LO)
@@ -111,7 +100,7 @@ def gazetteer_tag_uncased(
         "turn_idx",
         "text",
         F.explode(F.sequence(F.lit(1), F.length("text"))).alias("pos"),
-    ).withColumn("bk", F.expr(f"substring(text, pos, {block_chars})"))
+    ).withColumn("bk", F.expr(f"substring(text, pos, {BLOCK_CHARS})"))
 
     hits = (
         pos.join(gaz, "bk")
@@ -182,9 +171,7 @@ def gazetteer_tag_uncased(
     )
 
 
-def extract_mentions_full(
-    transcripts: DataFrame, gazetteer: DataFrame, alias_col: str = "alias",
-) -> DataFrame:
+def extract_mentions_full(transcripts: DataFrame, gazetteer: DataFrame) -> DataFrame:
     """Cased rule-based extraction ∪ uncased gazetteer-anchored
     extraction — the complete analog of the reference's script-agnostic
     model NER. The two paths are disjoint by construction (module doc),
@@ -192,5 +179,5 @@ def extract_mentions_full(
     from .extraction import extract_mentions
 
     return extract_mentions(transcripts).unionByName(
-        gazetteer_tag_uncased(transcripts, gazetteer, alias_col=alias_col)
+        gazetteer_tag_uncased(transcripts, gazetteer)
     )

@@ -3,8 +3,8 @@
 Every method but ``perfectmatch`` is one program, ``_match``, the
 reference's Ranker loop (ranking.py:399-469, :471-568) as a fuzzy join:
 exact hits short-circuit at 1.0, the other surfaces are paired with the
-alias space (block keys + salt), scored, filtered and cut per surface.
-Only the score and the cut vary:
+alias space (one block key + salt), each pair scored once, cut per
+surface and kept. Only the score and the cut vary:
 
 - ``perfect_match`` (ranking.py:286-325): hash equi-join of distinct
   mention surfaces against the alias table; match score 1.0.
@@ -23,8 +23,9 @@ String scores come from the pure-Python kernels in
 Arrow-batched pandas UDF.
 
 All methods share:
-- query dedup before scoring (ranking.py:674 / pipeline.py:682) —
-  scoring cost scales with |distinct surfaces|, not |mention instances|;
+- distinct query surfaces, deduplicated by the caller (ranking.py:674 /
+  pipeline.py:682) — scoring cost scales with |distinct surfaces|, not
+  |mention instances|;
 - alias noise filtering pushed to the scan (ranking.py:216-247);
 - variation→QID resolution join (ranking.py:679-705) producing the
   exploded candidate rows (mention, variation, score, qid, relv, abs_relv);
@@ -44,6 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from ..functions.embedding import embed_udf
 from ..functions.similarity import (
     containment_score,
     damlev_similarity,
@@ -52,7 +54,7 @@ from ..functions.similarity import (
     jaro_winkler_similarity,
 )
 from ..functions.text import alias_noise_filter
-from .blocking import salted, with_block_keys
+from .blocking import salted, with_block_key
 from .similarity_search import _dot
 
 
@@ -164,13 +166,14 @@ def perfect_match(queries: DataFrame, aliases: DataFrame) -> DataFrame:
 def _blocked_pairs(
     queries: DataFrame, aliases: DataFrame, salt_factor: int = 8
 ) -> DataFrame:
-    """(mention, variation) candidate pair space via block keys + salt."""
-    m = with_block_keys(queries.select("mention"), "mention")
-    a = with_block_keys(aliases.select("alias").distinct(), "alias")
+    """(mention, variation) pairs sharing the ranking block key, salted.
+    Each pair is joined once, so distinct ``queries`` need no dedup."""
+    m = with_block_key(queries.select("mention"), "mention")
+    a = with_block_key(aliases.select("alias").distinct(), "alias")
     m_s, a_s = salted(m, a, salt_factor)
-    pairs = m_s.join(a_s, ["block_key", "block_salt"], "inner")
-    # a pair may share both keys — dedup before scoring
-    return pairs.select("mention", F.col("alias").alias("variation")).distinct()
+    return m_s.join(a_s, ["block_key", "block_salt"], "inner").select(
+        "mention", F.col("alias").alias("variation")
+    )
 
 
 def _match(
@@ -182,19 +185,20 @@ def _match(
     salt_factor: int = 8,
     use_blocking: bool = True,
 ) -> DataFrame:
-    """The one ranking shape: exact → pairs → score → cut.
+    """The one ranking shape: exact → pairs → score → cut → keep.
 
-    Surfaces that perfect-match are returned with score 1.0 and skip
-    scoring (the reference's `remainers` logic, ranking.py:441-444).
-    Every other surface is paired with the blocked alias space (the
-    unblocked cross join when ``use_blocking=False`` — the reference's
-    full scan, for parity tests on small KBs only), and
-    ``score(pairs, missed)`` adds a ``score`` column. Rows keep when
-    ``score >= threshold`` (or, with no threshold, when the score is not
-    NULL). The per-surface cut keeps every pair at the best score when
-    ``top_k`` is None (dense_rank == 1 reproduces `[:1]` of sorted
-    unique scores, ranking.py:456-465), else the first ``top_k`` by
-    (score desc, variation asc)."""
+    ``queries`` holds distinct surfaces. Surfaces that perfect-match are
+    returned with score 1.0 and skip scoring (the reference's
+    `remainers` logic, ranking.py:441-444). Every other surface is
+    paired with the blocked alias space (the unblocked cross join when
+    ``use_blocking=False`` — the reference's full scan, for parity tests
+    on small KBs only), and ``score(pairs, missed)`` adds a ``score``
+    column, once per pair. The per-surface cut keeps every pair at the
+    best score when ``top_k`` is None (dense_rank == 1 reproduces `[:1]`
+    of sorted unique scores, ranking.py:456-465), else the first
+    ``top_k`` by (score desc, variation asc). Rows then keep when
+    ``score >= threshold`` (or non-NULL, without one); the cut orders by
+    score desc, NULLs last, so that equals keeping before the cut."""
     exact = perfect_match(queries, aliases)
     missed = queries.join(exact.select("mention"), "mention", "left_anti")
     if use_blocking:
@@ -203,17 +207,18 @@ def _match(
         pairs = missed.crossJoin(
             aliases.select(F.col("alias").alias("variation")).distinct()
         )
-    s = F.col("score")
-    scored = score(pairs, missed).filter(
-        s.isNotNull() if threshold is None else s >= F.lit(threshold)
-    )
     if top_k is None:
         w = Window.partitionBy("mention").orderBy(F.desc("score"))
         rank, limit = F.dense_rank().over(w), 1
     else:
         w = Window.partitionBy("mention").orderBy(F.desc("score"), F.asc("variation"))
         rank, limit = F.row_number().over(w), top_k
-    kept = scored.withColumn("rnk", rank).filter(F.col("rnk") <= limit)
+    s = F.col("score")
+    keep = s.isNotNull() if threshold is None else s >= F.lit(threshold)
+    # keep after the cut: no score filter for Catalyst to push below the
+    # scoring projection, where it would run the kernel a second time
+    scored = score(pairs, missed).withColumn("rnk", rank)
+    kept = scored.filter((F.col("rnk") <= limit) & keep)
     return exact.unionByName(kept.select("mention", "variation", "score"))
 
 
@@ -256,15 +261,9 @@ def embedding_match(
     top-k'd per query.
 
     Query-side embeddings are computed on the fly with the same hashed
-    n-gram encoder used for the KB (datagen.hashed_ngram_embedding) via
-    an Arrow-batched UDF; KB-side embeddings come from the embeddings
-    table (equi-join, not point queries — S6)."""
-    from ..datagen import EMB_DIM, hashed_ngram_embedding
-
-    @pandas_udf(T.ArrayType(T.FloatType()))
-    def embed_udf(s: pd.Series) -> pd.Series:
-        return s.astype(str).map(lambda x: hashed_ngram_embedding(x, EMB_DIM).tolist())
-
+    n-gram encoder used for the KB (``functions.embedding.embed_udf``);
+    KB-side embeddings come from the embeddings table (equi-join, not
+    point queries — S6)."""
     kb = embeddings_kb.select(
         F.col("key").alias("variation"), F.col("emb").alias("v_emb")
     )
@@ -306,7 +305,8 @@ def find_candidates(
     top_k: int = 3,
     salt_factor: int = 8,
 ) -> DataFrame:
-    """Method dispatch (ranking.py:609-617 analog) → resolved candidates.
+    """Method dispatch (ranking.py:609-617 analog) → resolved candidates
+    for the distinct surfaces in ``queries``.
 
     ``fuzzy`` (the engine default; DeezyMatch role): exact short-circuit
     + blocked Damerau-Levenshtein with threshold + top-k — the string

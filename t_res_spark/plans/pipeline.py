@@ -183,12 +183,12 @@ def blocking_metrics(surfaces: DataFrame) -> DataFrame:
     """Skew evidence for the lineage table (SURVEY §7.3 #4 — 'must be
     measured, not assumed'): per-block-key candidate counts with the
     overall p50/p99/max, so a hot key ('London' problem) shows up as a
-    number, not an OOM. One map-side-combinable agg over the blocked
-    surface table."""
-    from ..operators.blocking import with_block_keys
+    number, not an OOM. One map-side-combinable agg over the surface
+    table keyed as ranking's join keys it."""
+    from ..operators.blocking import with_block_key
 
     sizes = (
-        with_block_keys(surfaces.select("mention"), "mention")
+        with_block_key(surfaces.select("mention"), "mention")
         .groupBy("block_key")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -258,7 +258,7 @@ def resolve(
         if cfg.extra.get("uncased_gazetteer"):
             from ..operators.gazetteer import extract_mentions_full
 
-            return extract_mentions_full(transcripts, aliases, alias_col="alias")
+            return extract_mentions_full(transcripts, aliases)
         return extraction.extract_mentions(transcripts)
 
     def _predict():

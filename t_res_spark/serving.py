@@ -91,14 +91,15 @@ class TResService:
         turns = plan_api.sentence_turns(
             self.spark, plan_api.split_sentences(text)
         )
-        mentions = extract_mentions_full(turns, self.aliases, alias_col="alias")
+        mentions = extract_mentions_full(turns, self.aliases)
         return _mentions_payload(mentions.collect())
 
     def _candidates(self, toponyms: list[str]):
         from .operators.ranking import find_candidates
 
+        # distinct surfaces: a repeated one would repeat its candidates
         queries = self.spark.createDataFrame(
-            [(t,) for t in toponyms], "mention string"
+            [(t,) for t in dict.fromkeys(toponyms)], "mention string"
         )
         return find_candidates(
             queries, self.aliases, method=self.ranking_method,

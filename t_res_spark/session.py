@@ -43,12 +43,8 @@ def get_spark(
         # Explicit shuffle sizing; AQE coalesces down at runtime when small.
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # Adaptive execution: runtime re-plan, skew-join splitting,
-        # small-partition coalescing — all on by default for this engine.
-        # (TRES_AQE=0 is a benchmark-experiment escape hatch only.)
-        .config(
-            "spark.sql.adaptive.enabled",
-            "false" if os.environ.get("TRES_AQE") == "0" else "true",
-        )
+        # small-partition coalescing — all on for this engine.
+        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Arrow everywhere: pandas UDFs are the only Python in the hot path.

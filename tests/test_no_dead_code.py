@@ -7,6 +7,9 @@ not count: a def that only its own test calls is a second copy of a
 decision that lives elsewhere, or a feature nothing runs. Decorated defs
 (UDFs, fixtures, routes) are reached through their decorator and are
 skipped. ``KEEP`` lists the test-only defs that stay on purpose.
+
+A second sweep keeps the engine off the test-data generator: only
+``oracle.py`` may import ``datagen``.
 """
 import ast
 from pathlib import Path
@@ -91,3 +94,25 @@ def test_keep_list_is_not_stale():
     assert not set(KEEP) - defined, sorted(set(KEEP) - defined)
     called = set(KEEP) & _references()
     assert not called, sorted(called)
+
+
+def test_engine_does_not_import_datagen():
+    """No module under ``t_res_spark/`` but ``datagen.py`` itself and the
+    pure-Python ``oracle.py`` imports ``datagen``: what the engine shares
+    with the fixture generator (the embedding encoder, the block-key
+    mirror) lives in ``functions/``."""
+    hits = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        if rel in ("datagen.py", "oracle.py"):
+            continue
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            if isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                names = [node.module or ""] + [a.name for a in node.names]
+            else:
+                continue
+            if any(n.rsplit(".", 1)[-1] == "datagen" for n in names):
+                hits.append(f"{rel}:{node.lineno}")
+    assert not hits, "engine modules importing datagen: " + ", ".join(hits)

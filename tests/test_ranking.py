@@ -215,6 +215,19 @@ def test_block_keys_mirror_matches_spark(spark):
     assert spark_keys == {n: block_keys(n) for n in names}
 
 
+@pytest.mark.parametrize("method", ["fuzzy", "levenshtein", "jarowinkler"])
+def test_pair_kernel_runs_once_per_pair(spark, kb, method):
+    """The optimized plan evaluates the Arrow pair kernel in one node:
+    each blocked pair is joined once and scored once, and the keep
+    filter sits above the cut, where Catalyst cannot push it below the
+    scoring projection into a second kernel evaluation."""
+    cands = ranking.find_candidates(
+        _queries(spark, "Lvndon", "Shefiield", "London"), kb, method=method
+    )
+    plan = cands._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+
+
 def _containment(q, a):
     ql, al = q.lower(), a.lower()
     if ql in al:

@@ -83,6 +83,17 @@ def test_candidate_selection_and_disambiguation(server):
     assert dis["xqzul"]["prediction"] == "NIL"
 
 
+def test_repeated_toponyms_answer_as_once(server):
+    """A toponym listed twice, exact (``london``) or fuzzy (``lndon``),
+    gets the same candidates and the same prediction and score as when
+    listed once."""
+    once, twice = ["london", "lndon"], ["london", "lndon", "london", "lndon"]
+    for route in ("run_candidate_selection", "run_disambiguation"):
+        status, single = _get(f"{server}/{route}", {"toponyms": once})
+        assert status == 200 and single["lndon"]
+        assert _get(f"{server}/{route}", {"toponyms": twice}) == (200, single)
+
+
 def test_missing_params_and_unknown_route(server):
     status, body = _get(f"{server}/run_ner", {})
     assert status == 400 and "error" in body
