@@ -47,18 +47,18 @@ def align_spans(pred: DataFrame, gold: DataFrame) -> DataFrame:
         F.col("g.turn_idx")
     )
     # Best-overlap selection as a map-side-combinable min_by aggregation
-    # (r6; guide §2.3 "aggregate before you shuffle"): the former
-    # row_number window shuffled EVERY joined (pred × overlapping-gold)
-    # row and paid two sorts; the partial aggregate reduces each
-    # (conv_id, turn_idx, start_char) group to one row before the
-    # exchange and needs no sort at all. The min_by ordering struct
-    # reproduces the window's (overlap DESC NULLS LAST, gold_start ASC
-    # NULLS FIRST, gold_qid ASC NULLS FIRST) order exactly: field 1
+    # ("aggregate before you shuffle"): a row_number window would
+    # shuffle EVERY joined (pred × overlapping-gold) row and pay two
+    # sorts; the partial aggregate reduces each (conv_id, turn_idx,
+    # start_char) group to one row before the exchange and needs no
+    # sort at all. The min_by ordering struct encodes the
+    # (overlap DESC NULLS LAST, gold_start ASC NULLS FIRST,
+    # gold_qid ASC NULLS FIRST) order exactly: field 1
     # negates overlap (desc) and maps the unaligned row's NULL to
     # int-max so any matched row beats it (desc_nulls_last); fields
     # 2/3 map NULL to the smallest value (asc nulls-first) — those
-    # coalesces only ever decide groups that were order-degenerate
-    # (all-NULL ties) under the window too.
+    # coalesces only ever decide order-degenerate groups (all-NULL
+    # ties).
     ord_key = F.struct(
         F.coalesce(-overlap, F.lit(2147483647)).alias("k1"),
         F.coalesce(F.col("gold_start"), F.lit(-2147483648)).alias("k2"),
@@ -195,15 +195,15 @@ def align_gold_tokens(tokens: DataFrame, gold: DataFrame) -> DataFrame:
         "left",
     ).select(tokens["*"], "gold_start", "gold_type", "gold_qid")
     # Earliest-span selection as a map-side-combinable min_by aggregate
-    # (r6, same reshape + ordering-equivalence argument as align_spans:
-    # the former row_number window shuffled every token × covering-span
-    # row and paid two sorts; the partial aggregate sends one row per
-    # token through the exchange, sort-free). Grouping on tok_end too:
-    # two distinct tokens can share a start offset (overlapping
-    # tokenizations) and each must get its own label. NULL mapping in
-    # the ordering struct mirrors the window's asc-nulls-first; a group
-    # is either all-matched or the single unaligned row, so the
-    # coalesce never decides against a real span.
+    # (same reasoning as align_spans: a row_number window would shuffle
+    # every token × covering-span row and pay two sorts; the partial
+    # aggregate sends one row per token through the exchange,
+    # sort-free). Grouping on tok_end too: two distinct tokens can
+    # share a start offset (overlapping tokenizations) and each must
+    # get its own label. NULL mapping in the ordering struct is
+    # asc-nulls-first; a group is either all-matched or the single
+    # unaligned row, so the coalesce never decides against a real
+    # span.
     ord_key = F.struct(
         F.coalesce(F.col("gold_start"), F.lit(-2147483648)).alias("k1"),
         F.coalesce(F.col("gold_qid"), F.lit("")).alias("k2"),

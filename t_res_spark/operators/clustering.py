@@ -103,11 +103,14 @@ def _local_components(pairs: list[tuple], spark, schema) -> DataFrame:
     return spark.createDataFrame(rows, schema)
 
 
+# distributed-path round budget, and how many rounds run between two
+# convergence-signature jobs
+_MAX_ITERATIONS = 20
+_CHECK_EVERY = 2
+
+
 def connected_components(
-    edges: DataFrame,
-    max_iterations: int = 20,
-    check_every: int = 2,
-    local_threshold: int = 100_000,
+    edges: DataFrame, local_threshold: int = 100_000
 ) -> DataFrame:
     """edges(src, dst) → labels(mention_id, cluster_id).
 
@@ -118,9 +121,9 @@ def connected_components(
     Alternates large-star/small-star until the edge set is stable
     (count + order-insensitive checksum), localCheckpointing each round
     to cut lineage (SURVEY §4 'iterative convergence' row). The
-    convergence signature is only computed every ``check_every``
+    convergence signature is only computed every ``_CHECK_EVERY``
     iterations — the algorithm has a strictly decreasing potential
-    (Kiveris et al. §3), so equal signatures ``check_every`` apart can
+    (Kiveris et al. §3), so equal signatures ``_CHECK_EVERY`` apart can
     only mean a fixpoint, and the count/checksum job is half the
     per-iteration driver cost.
 
@@ -152,13 +155,13 @@ def connected_components(
         return _local_components(
             pairs, spark, f"mention_id {id_type}, cluster_id {id_type}"
         )
-    for it in range(max_iterations):
+    for it in range(_MAX_ITERATIONS):
         # lazy checkpoint: lineage still truncates at materialization,
         # but the separate eager-checkpoint job disappears — the
-        # signature collect (every check_every rounds) materializes
-        # check_every rounds in ONE job.
+        # signature collect (every _CHECK_EVERY rounds) materializes
+        # _CHECK_EVERY rounds in ONE job.
         nxt = _small_star(_large_star(cur)).localCheckpoint(eager=False)
-        if it % check_every == check_every - 1 or it == max_iterations - 1:
+        if it % _CHECK_EVERY == _CHECK_EVERY - 1 or it == _MAX_ITERATIONS - 1:
             nsig = _sig(nxt)
             if nsig == sig:
                 cur = nxt

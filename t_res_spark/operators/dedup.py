@@ -9,12 +9,18 @@ operator as entity resolution (operators/clustering.py).
 Scale notes:
 - exact dedup is one map-side-combinable groupBy on a 64/128-bit digest
   (never on raw text — shuffle bytes stay tiny);
-- MinHash/LSH shuffles (band_hash → doc) pairs: band count × rows, with
-  per-bucket pair generation bounded by a cap (huge buckets are exact-
-  duplicate families — route them through exact dedup, don't pair them);
-- SimHash buckets by table rotation of the 64-bit fingerprint;
+- MinHash/LSH shuffles (band_hash → doc) pairs: band count × rows;
+  SimHash buckets by table rotation of the 64-bit fingerprint. Both
+  expand bucket members into candidate pairs inside a cap-bounded
+  array (``_bucket_pairs``; huge buckets are exact-duplicate families
+  — route them through exact dedup, don't pair them);
+- embedding near-dup buckets by SRP sign bits, uncapped: a full SRP
+  bucket is not an exact-duplicate family, so dropping it loses true
+  edges. Its pairs come from a streaming bucket self-join until ROADMAP
+  direction 8 splits such buckets instead;
 - all near-dup candidate pairs go through a verify stage (true Jaccard /
-  Hamming / cosine) before edges are emitted — LSH alone over-merges.
+  Hamming / cosine) before ``_dup_clusters`` labels them — LSH alone
+  over-merges.
 
 MinHash here uses the standard universal-hash family
 h_i(x) = (a_i * x + b_i) mod p with fixed seeds, applied to 64-bit
@@ -147,16 +153,20 @@ def _bucket_pairs(
     banded: DataFrame, key_cols: list[str], bucket_cap: int
 ) -> DataFrame:
     """(key..., doc_id) bucket membership → distinct candidate (a, b)
-    pairs with a < b.
+    pairs with a < b. Callers: ``simhash_near_pairs`` and the unfused
+    ``minhash_lsh_pairs`` banding (the fused banding writes the same
+    expansion inline, with its estimate filter inside the array).
 
     ONE aggregation shuffle: ids are collected per bucket
     (map-side-combinable into arrays bounded by the cap filter) and the
     k·(k-1)/2 pairs expand NATIVELY from the sorted array — no
-    window-count pass and no bucket self-join (the previous plan's two
-    extra shuffles of the same rows). A whole bucket lands in one task
-    either way (that is what bucketing means); the cap bounds both the
-    array row and the quadratic expansion, and over-cap buckets are
-    exact/near-exact families the cheap exact pass already groups."""
+    window-count pass and no bucket self-join. A whole bucket lands in
+    one task either way (that is what bucketing means); the cap bounds
+    both the array row and the quadratic expansion, and over-cap
+    buckets are exact/near-exact families the cheap exact pass already
+    groups. An uncapped caller must not come here: one bucket's pairs
+    are built as one unspillable array row (see
+    ``embedding_near_duplicates``)."""
     buckets = (
         banded.groupBy(*key_cols)
         .agg(F.collect_list("doc_id").alias("ids"))
@@ -331,6 +341,26 @@ def jaccard_verify(
     )
 
 
+def _dup_clusters(rows: DataFrame, id_col: str, pairs: DataFrame) -> DataFrame:
+    """Verified (a, b) pairs → (doc_id, dup_cluster) over every id of
+    ``rows``: connected components close the pairs transitively, and
+    an id in no pair labels itself.
+
+    CC runs on the native id type (longs shuffle and compare cheaper
+    than strings); both labels are cast to string only here."""
+    labels = connected_components(
+        pairs.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+    )
+    return (
+        rows.select(F.col(id_col).alias("mention_id"))
+        .join(labels, "mention_id", "left")
+        .select(
+            F.col("mention_id").cast("string").alias("doc_id"),
+            F.coalesce("cluster_id", "mention_id").cast("string").alias("dup_cluster"),
+        )
+    )
+
+
 def near_duplicate_clusters(
     docs: DataFrame,
     text_col: str = "text",
@@ -343,10 +373,7 @@ def near_duplicate_clusters(
     Jaccard verify → connected components.
     Returns (doc_id, dup_cluster) covering every document (singletons
     map to themselves). ``shingle_n``: word-shingle width — 5 for strict
-    long-document dedup, 3 when single-word edits must still collide.
-
-    CC runs on the native (long) doc ids — cheaper shuffles and
-    comparisons than strings; labels are cast back at the surface."""
+    long-document dedup, 3 when single-word edits must still collide."""
     # Fused plan: signatures are computed once and consumed by the
     # banding shuffle (structs) plus the ids-only bucket pre-count —
     # TWO subplans sharing the signature subtree. Measured: AQE's
@@ -372,101 +399,85 @@ def near_duplicate_clusters(
     near = near.localCheckpoint(eager=True)
     sigs.unpersist()  # pair set is materialized; the sig cache is dead
     verified = jaccard_verify(docs, near, text_col, shingle_n, threshold)
-    edges = verified.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    labels = connected_components(edges)
-    return (
-        docs.select(F.col("doc_id").alias("mention_id"))
-        .join(labels, "mention_id", "left")
-        .select(
-            F.col("mention_id").cast("string").alias("doc_id"),
-            F.coalesce("cluster_id", "mention_id").cast("string").alias("dup_cluster"),
-        )
-    )
+    return _dup_clusters(docs, "doc_id", verified)
 
 
 def embedding_near_duplicates(
     vectors: DataFrame,
+    dim: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.95,
     bits: int = 8,
     tables: int = 4,
     seed: int = 42,
-    dim: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate clusters (task brief): SRP-LSH
     buckets propose candidate pairs, exact cosine verifies against the
     threshold, connected components closes them transitively. Returns
     (doc_id, dup_cluster) over every input row.
 
-    ``dim``: embedding dimensionality. Callers that know it (fixed
-    encoder width, table contract) should pass it — when None a
-    one-row probe job (one extra Spark job) reads it."""
+    ``dim``: embedding dimensionality (fixed encoder width, table
+    contract), as ``similarity_search.lsh_topk`` takes it.
+
+    Buckets are not capped: an over-full SRP bucket holds distinct
+    vectors, so dropping it would lose true near-dup edges. So pairs
+    come from a (table_id, bucket) self-join, not ``_bucket_pairs``:
+    the join streams a hot bucket's O(bucket²) pairs from a spillable
+    sort buffer and AQE's skew handling can split its partition, where
+    the in-array expansion would build them as one unspillable row.
+    The bound is the largest bucket's k·(k-1)/2 pairs per table (all
+    copies of one vector share every bucket); ROADMAP direction 8
+    brings a cap with extra-plane refinement."""
     from .similarity_search import _dot, _hyperplanes, _norm, srp_buckets_arrow
 
-    if dim is None:
-        dim_row = vectors.select(F.size(vec_col).alias("d")).first()
-        dim = dim_row["d"] if dim_row else 0
     vectors = _rebalance(vectors, id_col)
     planes = [_hyperplanes(dim, bits, seed + t) for t in range(tables)]
-    # Decide with small rows, move big rows once: if the bucket
-    # self-join and the pair dedup CARRIED both 64-dim vectors, every
-    # candidate pair would shuffle ~1 KB of payload through the join and
-    # again through the distinct, O(bucket²) pairs deep. So buckets are
-    # decided by ids alone, the distinct runs on bare
-    # (id, id_b), and the two vectors are re-attached ONCE to the
-    # surviving pair set (the jaccard_verify pattern). (id → vec) is
-    # functional, so distinct-on-ids is the identical pair set and the
-    # cosine sees the identical vectors.
+    # Decide with small rows, move big rows once: if the bucket pairs
+    # and their dedup CARRIED both 64-dim vectors, every candidate pair
+    # would shuffle ~1 KB of payload, O(bucket²) pairs deep. So pairs
+    # are decided on ids alone, and the two vectors are re-attached
+    # ONCE to the distinct pair set (the jaccard_verify pattern).
+    # (id → vec) is functional, so the cosine sees the identical
+    # vectors.
     # ids-only bucket rows from one Arrow matmul per batch; the sign
     # margins of the gate corpora, planted 1.5x copies included, are
     # audited in tests/test_ann_margins.py
-    bucketed_ids = srp_buckets_arrow(vectors, id_col, vec_col, planes)
-    other_ids = bucketed_ids.select(
-        F.col(id_col).alias("id_b"), "table_id", "bucket"
+    bucketed_ids = srp_buckets_arrow(vectors, id_col, vec_col, planes).select(
+        F.col(id_col).alias("a"), "table_id", "bucket"
     )
     cand_ids = (
-        bucketed_ids.join(other_ids, ["table_id", "bucket"])
-        .filter(F.col(id_col) < F.col("id_b"))
-        .select(id_col, "id_b")
+        bucketed_ids.join(
+            bucketed_ids.withColumnRenamed("a", "b"), ["table_id", "bucket"]
+        )
+        .filter(F.col("a") < F.col("b"))
+        .select("a", "b")
         .distinct()
     )
-    # norms computed ONCE PER VECTOR and carried to the pair (the
-    # cosine used to re-fold both norms per pair — 3 interpreted
-    # 64-element folds per candidate; now 1). Same fold on the same
-    # array → bit-identical norm doubles → bit-identical cosines.
+    # norms computed ONCE PER VECTOR and carried to the pair, so each
+    # candidate pays one interpreted 64-element fold (the dot), not
+    # three. Same fold on the same array → bit-identical cosines.
     va = vectors.select(
-        id_col, F.col(vec_col), _norm(F.col(vec_col)).alias("norm_a")
+        F.col(id_col).alias("a"),
+        F.col(vec_col).alias("vec_a"),
+        _norm(F.col(vec_col)).alias("norm_a"),
     )
     vb = vectors.select(
-        F.col(id_col).alias("id_b"),
+        F.col(id_col).alias("b"),
         F.col(vec_col).alias("vec_b"),
         _norm(F.col(vec_col)).alias("norm_b"),
     )
     verified = (
-        cand_ids.join(va, id_col)
-        .join(vb, "id_b")
+        cand_ids.join(va, "a")
+        .join(vb, "b")
         .withColumn(
             "cos_sim",
-            _dot(F.col(vec_col), F.col("vec_b"))
+            _dot(F.col("vec_a"), F.col("vec_b"))
             / F.greatest(F.col("norm_a") * F.col("norm_b"), F.lit(1e-12)),
         )
         .filter(F.col("cos_sim") >= threshold)
     )
-    # CC on the native id type (longs shuffle/compare cheaper);
-    # string cast only at the output surface.
-    edges = verified.select(
-        F.col(id_col).alias("src"), F.col("id_b").alias("dst")
-    )
-    labels = connected_components(edges)
-    return (
-        vectors.select(F.col(id_col).alias("mention_id"))
-        .join(labels, "mention_id", "left")
-        .select(
-            F.col("mention_id").cast("string").alias("doc_id"),
-            F.coalesce("cluster_id", "mention_id").cast("string").alias("dup_cluster"),
-        )
-    )
+    return _dup_clusters(vectors, id_col, verified)
 
 
 def simhash(docs: DataFrame, text_col: str = "text", bits: int = 64) -> DataFrame:

@@ -80,9 +80,8 @@ _LL = _case_class("Ll")  # unicode lowercase letters (BMP)
 # all-caps OCR garbage of the reference's robustness golden yield zero
 # mentions (' • - ST G pOllO-P• FERRIS …' → [],
 # tests/test_pipeline.py:85-90) without a model. The case classes are
-# full Unicode Lu/Ll (r4, VERDICT r03 item #3), so 'Łódź', 'İstanbul',
-# 'Évian' extract exactly like 'London'; \\w continuation was already
-# unicode.
+# full Unicode Lu/Ll, so 'Łódź', 'İstanbul', 'Évian' extract exactly
+# like 'London'; \\w continuation is unicode too.
 _CAP_TOKEN = re.compile(rf"^[{_LU}][{_LL}][\w'’-]*$")
 # Lowercase connectors that may join two capitalized spans
 # (utils/ner.py:383-391 lists hyphen connectors; :449-457 the 'of'
@@ -105,7 +104,7 @@ _STOP_CAPS = frozenset(
 # tokenizer does (recogniser.py:374-379)
 _TOKEN_WITH_POS = re.compile(r"[^\s,]+")
 
-# --- JVM prefilter parity (ADVICE r4) -------------------------------
+# --- JVM prefilter parity -------------------------------------------
 # The scan-side RLIKE prefilter uses Java's \p{Lu}/\p{Ll} (JVM Unicode
 # tables) while the Python kernel classifies with unicodedata; Python
 # is typically one Unicode version ahead (here 14.0 vs Java 17's

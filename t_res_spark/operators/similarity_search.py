@@ -258,39 +258,17 @@ def ivf_train_centroids(
     corpus; the corpus-sized work (assignment) stays distributed.
     Returns a (k, dim) list-of-lists, broadcast as a plan literal.
 
-    Sampling: a deterministic hash-threshold filter prunes the corpus
-    to ~4x the sample in one narrow codegen pass, so only the survivors
-    pay the ordered take (an ordered take over the whole corpus keeps a
-    per-partition top-n heap for every row). The filter and the
-    tie-break ordering are both pure functions of the vector bytes.
-    When the corpus is at most 4x the sample size (or the filter
-    undershoots), it takes the ordered sample over the whole corpus."""
-    import math
-
-    h = F.xxhash64(F.col(vec_col).cast("string"))
-
-    def _take_all():
-        return (
-            vectors.select(vec_col).orderBy(h).limit(sample_size).collect()
-        )
-
-    total = vectors.count()
-    if total == 0:
+    Sampling: the ``sample_size`` rows with the smallest hash of the
+    vector bytes, in one ordered take (a bounded top-n heap per
+    partition), so the sample is a pure function of the data."""
+    rows = (
+        vectors.select(vec_col)
+        .orderBy(F.xxhash64(F.col(vec_col).cast("string")))
+        .limit(sample_size)
+        .collect()
+    )
+    if not rows:
         raise ValueError("ivf_train_centroids: empty vectors DataFrame")
-    if total <= sample_size * 4:
-        rows = _take_all()
-    else:
-        space = 1 << 20
-        thr = max(1, math.ceil(space * 4 * sample_size / total))
-        rows = (
-            vectors.select(vec_col)
-            .filter(F.pmod(h, F.lit(space)) < F.lit(thr))
-            .orderBy(h)
-            .limit(sample_size)
-            .collect()
-        )
-        if len(rows) < sample_size:
-            rows = _take_all()
     x = np.asarray([r[0] for r in rows], dtype=np.float64)
     x = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
     rng = np.random.RandomState(seed)

@@ -51,7 +51,7 @@ def with_decade(docs: DataFrame, ts_col: str = "ts") -> DataFrame:
     its per-decade experiment splits). Pure codegen projection —
     fuses into the scan. ``%`` (dividend-signed mod, unlike pmod)
     truncates toward zero exactly like the reference's int(year/10)*10,
-    so pre-epoch years agree too: year -5 → decade 0 (ADVICE r03)."""
+    so pre-epoch years agree too: year -5 → decade 0."""
     year = F.year(F.col(ts_col))
     return docs.withColumn("year", year).withColumn(
         "decade", year - year % F.lit(10)

@@ -221,7 +221,7 @@ def parse_hipe(lines: DataFrame) -> DataFrame:
     token offsets, sentence splits on the MISC ``EndOfSentence`` marker,
     B-/I- runs → mention spans with reconstructed offsets.
 
-    Diagnostic-row contract (ADVICE r03): articles with malformed TSV
+    Diagnostic-row contract: articles with malformed TSV
     lines additionally emit ONE row with ``kind='malformed'``,
     ``sent_pos=-1`` and the dropped-line count in ``mention_start``
     (all other fields null). Consumers reading sentences or

@@ -83,9 +83,40 @@ def test_embedding_near_duplicates(spark):
     rows[9] = (9, [float(x * 1.001) for x in base[0]])  # near-copy of 0
     vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     out = {r["doc_id"]: r["dup_cluster"]
-           for r in dedup.embedding_near_duplicates(vecs, threshold=0.99).collect()}
+           for r in dedup.embedding_near_duplicates(
+               vecs, dim=16, threshold=0.99).collect()}
     assert out["0"] == out["9"]  # planted near-copy clustered
     assert len({out[str(i)] for i in range(1, 9)}) == 8  # others singleton
+
+
+@pytest.mark.parametrize("bucket_cap, n_pairs", [(50, 0), (60, 60 * 59 // 2)])
+def test_bucket_pairs_cap_contract(spark, bucket_cap, n_pairs):
+    """A 60-member bucket: a cap below its size drops it whole, and a
+    cap at its size keeps every pair."""
+    banded = spark.createDataFrame(
+        [(0, i) for i in range(60)], "bucket long, doc_id long"
+    )
+    pairs = dedup._bucket_pairs(banded, ["bucket"], bucket_cap)
+    assert pairs.count() == n_pairs
+    assert pairs.filter("a >= b").count() == 0
+
+
+def test_embedding_hot_bucket_uncapped(spark):
+    """60 identical vectors share every SRP bucket, which is over the
+    MinHash/SimHash cap of 50: the embedding path stays uncapped, so
+    they form one cluster, and 5 random vectors stay singletons."""
+    import numpy as np
+
+    rng = np.random.RandomState(11)
+    hot = [float(x) for x in rng.normal(size=16)]
+    rows = [(i, hot) for i in range(60)]
+    rows += [(100 + i, [float(x) for x in rng.normal(size=16)]) for i in range(5)]
+    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    out = {r["doc_id"]: r["dup_cluster"]
+           for r in dedup.embedding_near_duplicates(
+               vecs, dim=16, threshold=0.99).collect()}
+    assert len({out[str(i)] for i in range(60)}) == 1
+    assert all(out[str(100 + i)] == str(100 + i) for i in range(5))
 
 
 def test_simhash_hamming(docs):

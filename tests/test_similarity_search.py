@@ -210,3 +210,13 @@ def test_ivf_train_degenerate_sample(spark):
     vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     cents = ivf_train_centroids(vecs, k=16, sample_size=100, seed=3)
     assert 1 <= len(cents) <= 2
+
+
+def test_ivf_train_empty_input_raises(spark):
+    """An empty corpus has no sample to train on: the ordered take
+    returns no rows and training refuses, rather than fitting nothing."""
+    from t_res_spark.operators.similarity_search import ivf_train_centroids
+
+    vecs = spark.createDataFrame([], "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError, match="empty"):
+        ivf_train_centroids(vecs, k=4, sample_size=10)
