@@ -513,12 +513,13 @@ def q_j3b_blocked_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- fixed literal fixtures for the golden-VALUES oracles (VERDICT
-# r03 #4). Expected outputs are generated by tools/make_goldens_r4.py
-# with the SAME python kernels the Arrow UDFs execute; DuckDB's own
-# jaro_winkler / Indel / libm variants are thereby taken out of the
-# loop while the DISTRIBUTED plumbing (blocking, salting, top-k,
-# resolve joins, window tie-breaks) stays value-gated end-to-end.
+# --- fixed literal fixtures for the golden-VALUES oracles, for kernels
+# DuckDB cannot recompute. Expected outputs are generated by
+# tools/make_goldens_r4.py with the SAME python kernels the Arrow UDFs
+# execute; DuckDB's own jaro_winkler / Indel / libm variants are
+# thereby taken out of the loop while the DISTRIBUTED plumbing
+# (blocking, salting, top-k, resolve joins, window tie-breaks) stays
+# value-gated end-to-end.
 J4B_ALIASES = [
     ("london", "Q84", 0.5, 100.0),
     ("londinium", "Q84", 0.25, 50.0),
@@ -537,11 +538,12 @@ J4B_MENTIONS = [
 def q_j4b_jarowinkler(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J4b — Jaro-Winkler as a first-class find_candidates method
     (the reference ANN role names JW, ranking.py:471-568), ORACLE-GATED
-    via golden VALUES (VERDICT r03 #4): the real blocked+salted+top-k
-    operator runs over a fixed mention/alias fixture whose expected
-    output is precomputed with the engine's own JW kernel (DuckDB's
-    jaro_winkler is the rapidfuzz non-greedy variant — recomputation
-    in SQL stays impossible; kernel goldens in tests/test_similarity)."""
+    via golden VALUES, because DuckDB cannot recompute the kernel: the
+    real blocked+salted+top-k operator runs over a fixed mention/alias
+    fixture whose expected output is precomputed with the engine's own
+    JW kernel (DuckDB's jaro_winkler is the rapidfuzz non-greedy
+    variant — recomputation in SQL stays impossible; kernel goldens in
+    tests/test_similarity)."""
     from t_res_spark.operators.ranking import find_candidates
 
     _register(spark, sf_dir)
@@ -575,8 +577,8 @@ F4_PAIRS = [
 def q_f4_ocr_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F4 — fuzz.ratio OCR-variant classification
     (deezy_processing.py:52-85): half-split Indel ratios gate
-    positive/negative labels. ORACLE-GATED via golden VALUES (VERDICT
-    r03 #4) over a fixed pair fixture that exercises every branch —
+    positive/negative labels. ORACLE-GATED via golden VALUES
+    over a fixed pair fixture that exercises every branch —
     positive, negative, containment-neutral, mixed-ratio neutral, and
     the ±2 length gate; expected ratios/labels precomputed with the
     engine's fuzz_ratio kernel (Indel has no DuckDB analog —
@@ -845,7 +847,7 @@ def _derived_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     The filler document text is LOWERCASED so the planted capitalized
     nation surface is the only extractable mention per turn — this
     makes the full er_pipeline output SQL-derivable (the ml2/s8
-    constructed-expectation strategy, VERDICT r03 item #2): the oracle
+    constructed-expectation strategy): the oracle
     can state mention/start/prediction/cluster in closed form. The
     bench corpus (bench.derived_transcripts_amplified) deliberately
     keeps mixed-case filler so throughput numbers still measure
@@ -893,8 +895,8 @@ WHERE n_nationkey % 5 != 4 AND n_nationkey + 1 <= 24
 
 
 def q_er_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ER flagship clustering, ORACLE-GATED (VERDICT r02 #1): the
-    linking + transitive-clustering stages value-exact. Spark runs the
+    """ER flagship clustering, ORACLE-GATED, so the linking and
+    transitive-clustering stages are checked value-exact. Spark runs the
     real operators — most_popular → link_mentions → cluster_mentions
     with cross-entity ``extra_edges`` (so connected components actually
     executes and its labels are checked, not just the trivial
@@ -918,7 +920,7 @@ def q_er_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_er_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full ER pipeline end-to-end (extract → block → score → link →
-    cluster), ORACLE-GATED (VERDICT r03 item #2): the gate corpus
+    cluster), ORACLE-GATED by constructed expectation: the gate corpus
     lowercases its filler text (see ``_derived_transcripts``), so the
     Arrow-UDF extraction output — and therefore every downstream
     stage — is fully determined: one mention per turn, surface =
@@ -1034,11 +1036,11 @@ def q_er_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_d2_minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """D2 — MinHash+LSH near-dup clusters, ORACLE-GATED (VERDICT r02
-    #1): the engine runs the full probabilistic path (seeded MinHash →
-    LSH banding → in-bucket estimate filter → exact Jaccard verify →
-    connected components), while the oracle computes ground truth the
-    brute-force way — all-pairs exact 5-gram Jaccard ≥ threshold +
+    """D2 — MinHash+LSH near-dup clusters, ORACLE-GATED against
+    brute force: the engine runs the full probabilistic path (seeded
+    MinHash → LSH banding → in-bucket estimate filter → exact Jaccard
+    verify → connected components), while the oracle computes ground
+    truth the brute-force way — all-pairs exact 5-gram Jaccard ≥ threshold +
     transitive closure via recursive CTE. They agree exactly iff the
     LSH stage has perfect recall on true pairs and the verify stage
     kills every false candidate — which is precisely the correctness
@@ -1122,8 +1124,9 @@ _EMB_DIM_CACHE: dict = {}
 
 def _embeddings_dim(spark: SparkSession, sf_dir: str) -> int:
     """Embedding dimensionality per sf_dir, probed at most once per
-    process (VERDICT r03 #9: operators take ``dim`` from the caller;
-    the gate's caller-side knowledge is this cached probe)."""
+    process (operators take ``dim`` from the caller, so none runs a
+    probe job of its own; the gate's caller-side knowledge is this
+    cached probe)."""
     if sf_dir not in _EMB_DIM_CACHE:
         first = (
             spark.table("embeddings").select(F.size("embedding").alias("d")).first()
@@ -1180,7 +1183,7 @@ F5B_CANDS = [
 def q_f5b_bydistance_op(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F5b — the real by_distance operator (haversine + 1000 km cap +
     Venus guard + final-score rounding, linking.py:266-338),
-    ORACLE-GATED via golden VALUES (VERDICT r03 #4): fixed candidate/
+    ORACLE-GATED via golden VALUES: fixed candidate/
     coord/origin fixtures (exact binary-fraction coordinates) whose
     expected rounded-3dp scores are precomputed with a python mirror
     of the haversine column math; every score sits far from a rounding
@@ -1432,15 +1435,16 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- constructed-fixpoint fixture for the FULL 10-loop coherence oracle
-# (VERDICT r03 #5). Design: every mention has one DOMINANT candidate —
-# highest prior AND highest fixed-point score (verified numerically by
-# tools/make_goldens_r4.py) — and conv A carries a pinned anchor (U4),
-# so argmax never moves, each candidate's coherence c is CONSTANT
-# across iterations, and the damped recursion s_{t+1} = ½s_t + ½(p+c)/2
-# has the closed form s_10 = f + (p - f)/2^10 with f = (p+c)/2. The
-# oracle states those closed-form scores; the engine must reproduce
-# them through prerank + applyInPandas + 10 real loop iterations.
+# --- constructed-fixpoint fixture for the FULL 10-loop coherence oracle,
+# whose expected scores are closed-form. Design: every mention has one
+# DOMINANT candidate — highest prior AND highest fixed-point score
+# (verified numerically by tools/make_goldens_r4.py) — and conv A
+# carries a pinned anchor (U4), so argmax never moves, each candidate's
+# coherence c is CONSTANT across iterations, and the damped recursion
+# s_{t+1} = ½s_t + ½(p+c)/2 has the closed form s_10 = f + (p - f)/2^10
+# with f = (p+c)/2. The oracle states those closed-form scores; the
+# engine must reproduce them through prerank + applyInPandas + 10 real
+# loop iterations.
 # Reference math: mulrel_ranker.py:403-421, rel_utils.py:180-231.
 CTX10_ORIGINS = [("cA", "Q84", "london")]
 CTX10_MENTIONS = [
@@ -1468,12 +1472,11 @@ CTX10_CANDS = [
 
 def q_ctx10_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ML5 — the FULL 10-loop damped coherence disambiguator,
-    ORACLE-GATED via constructed fixpoint (VERDICT r03 #5): see the
-    CTX10 fixture notes above. ``round_dp=3`` — the loop rounds in
-    python, the oracle embeds the same closed-form values. The
-    corpus-scale run is itself oracle-gated since round 5
-    (ctx_disambiguate, single-candidate degeneracy) and the n_loops=0
-    slice by ctx0_prior_argmax (oracle)."""
+    ORACLE-GATED via constructed fixpoint: see the CTX10 fixture
+    notes above. ``round_dp=3`` — the loop rounds in python, the
+    oracle embeds the same closed-form values. The corpus-scale run is
+    itself oracle-gated (ctx_disambiguate, single-candidate
+    degeneracy) and the n_loops=0 slice by ctx0_prior_argmax (oracle)."""
     from t_res_spark.operators.context import context_disambiguate
 
     _register(spark, sf_dir)
@@ -1549,7 +1552,7 @@ FROM ({MENTIONS_SQL})
 
 
 def q_ctx0_prior_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ML5 oracle slice (VERDICT r02 #3): with ``n_loops=0`` the
+    """ML5 oracle slice: with ``n_loops=0`` the
     coherence model reduces exactly to argmax(normalized prior) per
     mention (reference math: /root/reference/utils/rel_utils.py:180-231
     — the prior term of the MulRelRanker score), which IS
@@ -1572,7 +1575,7 @@ def q_ctx0_prior_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_ctx1_one_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ML5 oracle slice #2 (VERDICT r4 #6): ``n_loops=1`` on the GATE
+    """ML5 oracle slice #2: ``n_loops=1`` on the GATE
     CORPUS. One damped update from the ctx0 state is closed-form:
     best = argmax(prior); ctx_m = normalize(mean of other mentions'
     best embeddings); s1 = (1-df)·prior + df·(prior + cosine)/2. The
@@ -1759,7 +1762,7 @@ def _ctx1_oracle_sql(round_out: bool = True) -> str:
 
 
 # ---------------------------------------------------------------------------
-# uncased-script gazetteer tagging (VERDICT r4 #3)
+# uncased-script gazetteer tagging (CJK, Arabic and Hebrew toponyms)
 # ---------------------------------------------------------------------------
 
 # Planted uncased-script payloads (doc_id % 8): CJK containment with and
@@ -1995,9 +1998,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "d5_embedding_neardup": q_d5_embedding_neardup,
         # --- entries 51+ (driver-report overflow) ----------------------
         # The driver's CORRECTNESS report records at most 50 queries in
-        # dict order (evidence: r3 ran 50-of-50; r4 ran 50-of-51 and the
-        # one absent entry, d5_embedding_neardup, sat at position 51 —
-        # VERDICT r4 item #2). Entries below the cut keep full gate
+        # dict order: a 51-query run reported 50, and the one left out,
+        # d5_embedding_neardup, sat at position 51. Entries below the
+        # cut keep full gate
         # coverage via tools/validate_gate.py, whose artifact
         # (CORRECTNESS_full_r5.json) is committed in-repo; the window
         # above holds every query whose ONLY oracle evidence is the
@@ -2006,8 +2009,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # queries (ctx0 is exactly the st0 state of ctx10_corpus's
         # unrolled oracle; ctx1 is the same generator at depth 1 vs
         # 10 — and the flagship default-config corpus run,
-        # ctx_disambiguate, is itself oracle-exact and in-window since
-        # round 5), s9_tokens shares the S9 parser with the in-window
+        # ctx_disambiguate, is itself oracle-exact and in-window),
+        # s9_tokens shares the S9 parser with the in-window
         # s9_mentions, f5b shares the F5 operator with the in-window
         # f5_bydistance.
         "ctx0_prior_argmax": q_ctx0_prior_argmax,

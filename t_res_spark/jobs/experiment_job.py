@@ -33,10 +33,9 @@ def run_experiment(
     rows: DataFrame,
     aliases: DataFrame,
     ranking_method: str = "fuzzy",
-    split_col: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Experiment rows (article_id, sentences, annotations[, split
-    frame]) → (per-mention results joined with gold, metrics row).
+    """Experiment rows (article_id, sentences, annotations) →
+    (per-mention results joined with gold, metrics row).
 
     Stages (each the Spark analog of the reference step cited):
     1. parse stringified columns (prepare_sents, process_data.py:47-128);
@@ -56,7 +55,6 @@ def run_experiment(
     from ..operators.alignment import align_spans
     from ..plans.pipeline import PipelineConfig, resolve
     from ..sources.ingest import parse_annotations, parse_sentences
-    from ..sources.readers import merge_splits
     from ..sources.tables import write_stage
 
     sentences = parse_sentences(rows)
@@ -92,10 +90,6 @@ def run_experiment(
         ["conv_id", "turn_idx", "start_char"],
         "left",
     )
-    if split_col is not None:
-        results = merge_splits(
-            results.withColumn("article_id", F.col("conv_id")), split_col
-        )
     results = write_stage(results, f"{res.scratch[0]}/results")
     res.mentions.unpersist()
 

@@ -15,6 +15,12 @@ with the same --checkpoint-dir and completed stages are skipped
       --checkpoint-dir s3://bucket/tres_ckpt \
       --output s3://bucket/clusters
 
+Optional flags: ``--entities`` (an entity table that decorates each link
+with its coordinates and class), ``--ranking-method`` (perfectmatch,
+partialmatch, levenshtein, fuzzy or jarowinkler; default fuzzy),
+``--salt-factor`` (hot block-key salting, default 8) and ``--overwrite``
+(recompute stages already in the catalog). Linking is most-popular.
+
 On the sandbox: tools/submit.sh packages the zip and runs local-mode.
 """
 
@@ -33,7 +39,6 @@ def main() -> None:
     ap.add_argument("--checkpoint-dir", default=None)
     ap.add_argument("--output", required=True)
     ap.add_argument("--ranking-method", default="fuzzy")
-    ap.add_argument("--linking-method", default="mostpopular")
     ap.add_argument("--salt-factor", type=int, default=8)
     ap.add_argument("--overwrite", action="store_true")
     args = ap.parse_args()
@@ -52,11 +57,7 @@ def main() -> None:
         if args.checkpoint_dir
         else None
     )
-    cfg = PipelineConfig(
-        ranking_method=args.ranking_method,
-        linking_method=args.linking_method,
-        salt_factor=args.salt_factor,
-    )
+    cfg = PipelineConfig(ranking_method=args.ranking_method, salt_factor=args.salt_factor)
     res = resolve(spark, transcripts, aliases, entities=entities,
                   config=cfg, catalog=catalog)
     res.clusters.write.mode("overwrite").parquet(args.output)

@@ -324,7 +324,8 @@ def find_candidates(
     elif method == "levenshtein":
         matches = partial_match(queries, aliases, damlev=True, salt_factor=salt_factor)
     elif method == "embcosine":
-        assert embeddings_kb is not None
+        if embeddings_kb is None:
+            raise ValueError("ranking method 'embcosine' needs the embeddings_kb table")
         matches = embedding_match(
             queries, aliases, embeddings_kb, threshold, top_k, salt_factor
         )

@@ -35,6 +35,10 @@ _TERM = ".!?。！？．؟…"
 _SENTENCE = re.compile(rf"[^{_TERM}]+[{_TERM}]*\s*|[{_TERM}]+\s*")
 _PUNCT_ONLY = re.compile(rf"^[{_TERM}\s]*$")
 
+# candidates kept per surface by the interactive surface (run_text and
+# the serving endpoints); batch runs keep PipelineConfig().top_k
+TOP_K = 7
+
 
 def split_sentences(text: str) -> list[tuple[int, str, int]]:
     """(sent_idx, sentence, start_offset) — offset-preserving splitter
@@ -106,21 +110,15 @@ def candidate_maps(rows) -> tuple[dict, dict, dict]:
     return match_map, cross_map, prior_map
 
 
-def run_text(
-    spark: SparkSession,
-    text: str,
-    aliases,
-    entities=None,
-    ranking_method: str = "fuzzy",
-    threshold: float = 0.7,
-    top_k: int = 7,
-) -> list[dict]:
+def run_text(spark: SparkSession, text: str, aliases, entities=None) -> list[dict]:
     """One text → list of mention dicts in the reference's README
     shape: mention, ner_score, pos, sent_idx, end_pos, tag, sentence,
     prediction, ed_score, string_match_score, prior_cand_score,
     cross_cand_score, latlon, wkdt_class.
 
-    Script-agnostic like the reference's model NER: ``resolve()``'s
+    Ranking is ``resolve()``'s default fuzzy method and 0.7 threshold,
+    keeping the ``TOP_K`` best candidates per surface. Script-agnostic
+    like the reference's model NER: ``resolve()``'s
     ``uncased_gazetteer`` extraction unions the cased rule tagger with
     the gazetteer-anchored uncased tagger over the alias KB, so a
     CJK/Arabic/Hebrew toponym in the KB is tagged and linked like a
@@ -135,12 +133,7 @@ def run_text(
         sentence_turns(spark, sentences),
         aliases,
         entities=entities,
-        config=PipelineConfig(
-            ranking_method=ranking_method,
-            fuzzy_threshold=threshold,
-            top_k=top_k,
-            extra={"uncased_gazetteer": True},
-        ),
+        config=PipelineConfig(top_k=TOP_K, uncased_gazetteer=True),
     )
     try:
         match_map, cross_map, prior_map = candidate_maps(res.candidates.collect())

@@ -39,7 +39,7 @@ import atexit
 import shutil
 import tempfile
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import asdict, dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -133,25 +133,19 @@ def _scratch_dir(spark: SparkSession):
 class PipelineConfig:
     """Analog of the reference's Ranker/Linker method config
     (pipeline.py:95-106 defaults: perfectmatch + mostpopular; our
-    default is the fuzzy DeezyMatch-analog ranker)."""
+    default ranker is the fuzzy DeezyMatch analog, and linking is always
+    most-popular). Every field goes into the stage-table config hash.
 
-    # perfectmatch|partialmatch|levenshtein|embcosine|fuzzy|jarowinkler
+    ``ranking_method`` is one of perfectmatch, partialmatch, levenshtein,
+    fuzzy and jarowinkler. ``uncased_gazetteer`` adds the
+    gazetteer-anchored uncased tagger to extraction (see ``_extract``):
+    ``run_text`` sets it, batch runs leave it off."""
+
     ranking_method: str = "fuzzy"
-    linking_method: str = "mostpopular"  # mostpopular|bydistance
     fuzzy_threshold: float = 0.7
     top_k: int = 3
     salt_factor: int = 8
-    extra: dict = field(default_factory=dict)
-
-    def as_dict(self) -> dict:
-        return {
-            "ranking_method": self.ranking_method,
-            "linking_method": self.linking_method,
-            "fuzzy_threshold": self.fuzzy_threshold,
-            "top_k": self.top_k,
-            "salt_factor": self.salt_factor,
-            **self.extra,
-        }
+    uncased_gazetteer: bool = False
 
 
 @dataclass
@@ -201,7 +195,7 @@ def blocking_metrics(surfaces: DataFrame) -> DataFrame:
     )
 
 
-def stage_metrics(spark: SparkSession, clusters: DataFrame) -> DataFrame:
+def stage_metrics(clusters: DataFrame) -> DataFrame:
     """Per-partition lineage/metrics table (north rule): row counts and
     cluster stats per shuffle partition, computed with
     spark_partition_id — an auditable record that skew mitigation
@@ -221,15 +215,13 @@ def resolve(
     spark: SparkSession,
     transcripts: DataFrame,
     aliases: DataFrame,
-    embeddings_kb: DataFrame | None = None,
     entities: DataFrame | None = None,
-    origins: DataFrame | None = None,
     config: PipelineConfig | None = None,
     catalog: CheckpointCatalog | None = None,
 ) -> PipelineResult:
     """Run the full ER pipeline; every stage checkpointable/resumable."""
     cfg = config or PipelineConfig()
-    cfg_d = cfg.as_dict()
+    cfg_d = asdict(cfg)
     scratch = None
     if catalog is None:
         scratch = _scratch_dir(spark)
@@ -255,19 +247,11 @@ def resolve(
         # corpus pass whose scan prefilter (\p{Lo}) prunes it to
         # nothing on latin corpora, but a 10^12-turn run should not
         # pay even the scan unless the corpus warrants it.
-        if cfg.extra.get("uncased_gazetteer"):
+        if cfg.uncased_gazetteer:
             from ..operators.gazetteer import extract_mentions_full
 
             return extract_mentions_full(transcripts, aliases)
         return extraction.extract_mentions(transcripts)
-
-    def _predict():
-        if cfg.linking_method == "mostpopular":
-            return linking.most_popular(candidates)
-        if cfg.linking_method == "bydistance":
-            assert entities is not None and origins is not None
-            return linking.by_distance(candidates, entities, origins)
-        raise ValueError(f"unknown linking method: {cfg.linking_method}")
 
     mentions = None
     try:
@@ -280,14 +264,15 @@ def resolve(
             lambda: ranking.find_candidates(
                 surfaces,
                 aliases,
-                embeddings_kb=embeddings_kb,
                 method=cfg.ranking_method,
                 threshold=cfg.fuzzy_threshold,
                 top_k=cfg.top_k,
                 salt_factor=cfg.salt_factor,
             ),
         )
-        predictions = _stage("predictions", _predict, cut="parquet")
+        predictions = _stage(
+            "predictions", lambda: linking.most_popular(candidates), cut="parquet"
+        )
         # linked is not persisted: it re-derives from the cached mentions
         # with one cheap broadcast join per consuming branch, while
         # caching it would double the memory footprint of the widest
@@ -296,7 +281,7 @@ def resolve(
             "linked", lambda: linking.link_mentions(mentions, predictions, entities)
         )
         clusters = _stage("clusters", lambda: clustering.cluster_mentions(linked))
-        metrics = _stage("metrics", lambda: stage_metrics(spark, clusters))
+        metrics = _stage("metrics", lambda: stage_metrics(clusters))
     except BaseException:
         # a stage raised: release the mentions cache and remove the
         # run's scratch now, not at exit

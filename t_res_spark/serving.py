@@ -53,24 +53,18 @@ def _mentions_payload(rows) -> list[dict]:
 
 
 class TResService:
-    """Endpoint implementations over the modular stage functions."""
+    """Endpoint implementations over the modular stage functions. Every
+    endpoint ranks like ``run_text``: fuzzy, threshold 0.7, the
+    ``plans.api.TOP_K`` best candidates per surface."""
 
-    def __init__(self, spark, aliases, entities=None, ranking_method="fuzzy",
-                 threshold: float = 0.7, top_k: int = 7):
+    def __init__(self, spark, aliases, entities=None):
         self.spark = spark
         self.aliases = aliases
         self.entities = entities
-        self.ranking_method = ranking_method
-        self.threshold = threshold
-        self.top_k = top_k
 
     # /resolve_full_text (app_template.py:75-83)
     def resolve_full_text(self, text: str) -> list[dict]:
-        return plan_api.run_text(
-            self.spark, text, self.aliases, entities=self.entities,
-            ranking_method=self.ranking_method, threshold=self.threshold,
-            top_k=self.top_k,
-        )
+        return plan_api.run_text(self.spark, text, self.aliases, entities=self.entities)
 
     # /resolve_sentence (app_template.py:64-72). Delta vs reference:
     # multi-sentence input is still split internally (the reference
@@ -101,10 +95,7 @@ class TResService:
         queries = self.spark.createDataFrame(
             [(t,) for t in dict.fromkeys(toponyms)], "mention string"
         )
-        return find_candidates(
-            queries, self.aliases, method=self.ranking_method,
-            threshold=self.threshold, top_k=self.top_k,
-        )
+        return find_candidates(queries, self.aliases, top_k=plan_api.TOP_K)
 
     # /run_candidate_selection (app_template.py:97-101)
     def run_candidate_selection(self, toponyms: list[str]) -> dict:

@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.pipeline import PipelineConfig, resolve
+from ..plans.pipeline import resolve
 from ..sources.tables import hadoop_fs, write_stage
 
 TRANSCRIPT_SCHEMA_DDL = (
@@ -59,29 +59,18 @@ def stream_transcripts(spark: SparkSession, path: str) -> DataFrame:
 
 
 class IncrementalResolver:
-    """foreachBatch handler: ``resolve()`` each micro-batch (the batch
-    pipeline's stage graph and default fuzzy/mostpopular config), then
+    """foreachBatch handler: ``resolve()`` each micro-batch with the
+    batch pipeline's stage graph and default ``PipelineConfig()``
+    (fuzzy ranking, threshold 0.7, top 3, most-popular linking), then
     assign stable cluster ids via the persisted root-state table."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        aliases: DataFrame,
-        state_dir: str,
-        threshold: float = 0.7,
-        top_k: int = 3,
-    ):
+    def __init__(self, spark: SparkSession, aliases: DataFrame, state_dir: str):
         self.spark = spark
         self.aliases = aliases
         self.state_dir = state_dir.rstrip("/")
-        self.threshold = threshold
-        self.top_k = top_k
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        res = resolve(
-            self.spark, batch_df, self.aliases,
-            config=PipelineConfig(fuzzy_threshold=self.threshold, top_k=self.top_k),
-        )
+        res = resolve(self.spark, batch_df, self.aliases)
         try:
             self._fold(res.linked, batch_id)
         finally:
@@ -123,10 +112,12 @@ class IncrementalResolver:
             f"{self.state_dir}/clusters/batch_id={batch_id}",
         )
 
-    def start(self, stream: DataFrame, trigger_once: bool = True):
-        writer = stream.writeStream.foreachBatch(self.process_batch).option(
-            "checkpointLocation", f"{self.state_dir}/_checkpoint"
+    def start(self, stream: DataFrame):
+        """Drain what ``stream`` has now (``availableNow``) through
+        ``process_batch``; the query stops once it has caught up."""
+        return (
+            stream.writeStream.foreachBatch(self.process_batch)
+            .option("checkpointLocation", f"{self.state_dir}/_checkpoint")
+            .trigger(availableNow=True)
+            .start()
         )
-        if trigger_once:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()

@@ -124,7 +124,7 @@ def test_resolve_uncased_gazetteer_flag(spark):
     assert {r["prediction"] for r in off.clusters.collect()} == {"E1"}
     on = resolve(
         spark, transcripts, aliases,
-        config=PipelineConfig(extra={"uncased_gazetteer": True}),
+        config=PipelineConfig(uncased_gazetteer=True),
     )
     got = {r["mention"]: r["prediction"] for r in on.clusters.collect()}
     assert got == {"Tarvik": "E1", "東京": "E9"}

@@ -23,6 +23,7 @@ KEEP = {
     "ivf_train_centroids": "the only producer of ivf_topk's centroids",
     "with_turn_context": "reference feature P8: lag/lead turn context",
     "read_hf_json": "reference feature S10: HF dataset load + limit",
+    "merge_splits": "reference feature J8: experiment split-column merge",
     "read_annotation_lines": "WebAnno/HIPE ingest: ordered lines for the S8/S9 parsers",
     "zfill_code": "reference feature F10: str.zfill publication codes",
     "normalize_vocab_token": "reference feature F13: vocab token normalisation",

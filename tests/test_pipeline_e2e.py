@@ -75,19 +75,21 @@ def test_scratch_dir_lifecycle(spark, tiny_dir, scratch_root, persisted_rdds):
     assert os.listdir(scratch_root) == []
 
     before = persisted_rdds()
-    with pytest.raises(ValueError, match="unknown linking method"):
+    with pytest.raises(ValueError, match="unknown ranking method"):
         resolve(
             spark, transcripts, aliases,
-            config=PipelineConfig(linking_method="bogus"),
+            config=PipelineConfig(ranking_method="bogus"),
         )
     assert os.listdir(scratch_root) == []
     assert persisted_rdds() <= before
 
 
 def _cfg_hash():
+    from dataclasses import asdict
+
     from t_res_spark.sources.tables import config_hash
 
-    return config_hash(PipelineConfig().as_dict())
+    return config_hash(asdict(PipelineConfig()))
 
 
 def test_metrics_table(spark, tiny_dir):

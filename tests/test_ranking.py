@@ -285,6 +285,14 @@ def test_find_candidates_matches_reference(spark, kb, method, reference):
         == _reference(**reference)
 
 
+def test_find_candidates_embcosine_needs_embeddings(spark, kb):
+    """``embcosine`` without an embeddings table is a caller error that
+    names the missing table, raised as ``ValueError`` so ``python -O``
+    keeps it."""
+    with pytest.raises(ValueError, match="embeddings_kb"):
+        ranking.find_candidates(_queries(spark, "London"), kb, method="embcosine")
+
+
 def test_find_candidates_embcosine(spark, kb):
     """``embcosine`` through ``find_candidates``: exact hits at 1.0, and
     every other surface keeps its blocked aliases whose embedding cosine
